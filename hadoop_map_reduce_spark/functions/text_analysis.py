@@ -35,12 +35,6 @@ def stopword_hits(tokens: Column, lang: str) -> Column:
     return F.size(F.filter(tokens, lambda t: F.array_contains(stop, t)))
 
 
-def distinct_stopword_hits(tokens: Column, lang: str) -> Column:
-    """Number of distinct stopwords of ``lang`` present in the tokens."""
-    stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.array_intersect(F.array_distinct(tokens), stop))
-
-
 def lang_id(tokens: Column) -> Column:
     """Deterministic argmax over per-language stopword hits.
 

@@ -52,7 +52,7 @@ def doubles_sql(values) -> str:
             return "array(" + ",".join(render(x) for x in v) + ")"
         v = float(v)
         if not math.isfinite(v):
-            raise ValueError("lit_doubles: non-finite literal")
+            raise ValueError("doubles_sql: non-finite literal")
         return repr(v) + "D"
 
     return render(values)

@@ -376,22 +376,6 @@ def pq_topk_adc(
 # ---------------------------------------------------------------------------
 
 
-def _nearest_cell(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the nearest coarse centroid by squared L2 (ties to the
-    lower cell) — same compact transform-over-literal-array argmin as
-    :func:`_nearest_code` (one lambda, not ``n_cells`` subtrees)."""
-    cent_lit = lit_doubles(centroids)
-    d2s = F.transform(
-        cent_lit,
-        lambda cvec: F.aggregate(
-            F.zip_with(vec, cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    return (F.array_position(d2s, F.array_min(d2s)) - 1).cast("int")
-
-
 def ivfpq_coarse_centroids(
     corpus: DataFrame,
     n_cells: int = 16,

@@ -2,19 +2,20 @@
 
 The reference writes one sorted text file per reduce partition plus a
 ``_SUCCESS`` marker (TextOutputFormat, WordCountV2.java:49,53; artifacts
-``bigram_custom8/part-r-00000..00031``). Two modes:
+``bigram_custom8/part-r-00000..00031``). Both modes write exactly
+``num_partitions`` files ``part-00000..`` (empty partitions included,
+like TextOutputFormat), each sorted by ``(key, value)``, through one
+JVM-only pipeline: ``repartitionById`` on a partition-id column, then
+``sortWithinPartitions`` and ``saveAsTextFile``. The mode only picks the
+partition id:
 
-- default (Spark-native, fast): ``repartition(n, key)`` (murmur3) +
-  ``sortWithinPartitions`` + text write. Each written file is sorted with
-  disjoint hash-assigned keys; NOTE the DataFrame writer emits no file
-  for an empty partition, so the file count is <= n (and filenames carry
-  writer UUIDs). Consumers needing exactly-n contiguously-numbered parts
-  — the reference's output contract — must use ``hadoop_layout=True``.
-- ``hadoop_layout=True``: byte-identical file-level layout with the
-  reference — keys routed by Hadoop ``Text.hashCode`` via an RDD
-  partitioner, exactly ``num_partitions`` files (``part-00000..``, empty
-  partitions included, like TextOutputFormat). Slow path (Python
-  round-trip); exists for golden-artifact parity.
+- default (Spark-native): ``pmod(hash(k), n)``, the murmur3 placement
+  ``repartition(n, k)`` gives.
+- ``hadoop_layout=True``: Hadoop ``HashPartitioner`` over
+  ``Text.hashCode`` (:func:`hadoop_partition_col`), the exact key→file
+  assignment of the reference's golden artifacts.
+
+A null value writes the key alone, with no tab, as TextOutputFormat does.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_map_reduce_spark.functions.hashing import hadoop_partition
+from hadoop_map_reduce_spark.functions.hashing import hadoop_partition_col
 
 
 def write_kv_text(
@@ -37,59 +38,36 @@ def write_kv_text(
     """Write ``key<TAB>value`` lines, one file per hash partition.
 
     Emits Spark's ``_SUCCESS`` marker (same Hadoop output-committer
-    behavior as the reference). Both modes share the overwrite contract:
-    an existing target directory is replaced (``saveAsTextFile`` has no
-    overwrite mode, so the hadoop_layout path clears the target through
-    Hadoop's FileSystem API — works on any supported scheme, not just
-    local paths).
+    behavior as the reference). An existing target directory is replaced:
+    ``saveAsTextFile`` has no overwrite mode, so the target is cleared
+    through Hadoop's FileSystem API (any supported scheme, not just local
+    paths).
     """
-    if hadoop_layout:
-        sc = df.sparkSession.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-        kv = df.select(
-            F.col(key_col).cast("string").alias("k"),
-            F.col(value_col).cast("string").alias("v"),
-        )
-        lines = (
-            kv.rdd.map(lambda r: (r["k"], r["v"]))
-            .partitionBy(
-                num_partitions, lambda k: hadoop_partition(k, num_partitions)
-            )
-            .mapPartitions(
-                lambda it: (
-                    f"{k}\t{v}"
-                    for k, v in (sorted(it) if sort_within else it)
-                )
-            )
-        )
-        lines.saveAsTextFile(path)
-        return
+    jvm = df.sparkSession._jvm
+    jsc = df.sparkSession.sparkContext._jsc
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    if fs.exists(hpath):
+        fs.delete(hpath, True)
 
-    out = df.select(
-        F.concat_ws(
-            "\t",
-            F.col(key_col).cast("string"),
-            F.col(value_col).cast("string"),
-        ).alias("value"),
-        F.col(key_col).cast("string").alias("_k"),
-    ).repartition(num_partitions, F.col("_k"))
+    kv = df.select(
+        F.col(key_col).cast("string").alias("k"),
+        F.col(value_col).cast("string").alias("v"),
+    )
+    # A repartitionById shuffle is neither elided by EnsureRequirements
+    # nor coalesced by AQE, so every partition id keeps its own file.
+    pid = (
+        hadoop_partition_col(F.col("k"), num_partitions)
+        if hadoop_layout
+        else F.pmod(F.hash("k"), F.lit(num_partitions))
+    )
+    out = kv.repartitionById(num_partitions, pid)
     if sort_within:
-        out = out.sortWithinPartitions("_k")
-    # The exactly-num_partitions contract vs AQE: when an upstream
-    # exchange already hash-partitions on the same key with the same
-    # count (e.g. the count aggregate and the session default both at
-    # n), EnsureRequirements elides this repartition and AQE is then
-    # free to coalesce the surviving upstream exchange — the write
-    # produced 1-4 files instead of n. Pin coalescing off for the write
-    # action only (restored after); upstream queries keep full AQE.
-    sess = df.sparkSession
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = sess.conf.get(coalesce_key, "true")
-    sess.conf.set(coalesce_key, "false")
-    try:
-        out.select("value").write.mode("overwrite").text(path)
-    finally:
-        sess.conf.set(coalesce_key, prev)
+        out = out.sortWithinPartitions("k", "v")
+    lines = out.select(F.concat_ws("\t", "k", "v"))
+    rdd = getattr(lines._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING()).javaRDD()
+    if rdd.getNumPartitions() == 0:
+        # The optimizer (or AQE, once the shuffle ran) prunes an empty
+        # input to an empty relation, which has no partitions at all.
+        rdd = rdd.repartition(num_partitions)
+    rdd.saveAsTextFile(path)

@@ -48,9 +48,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
-    EqualTo,
     Filter,
-    In,
     InputPartition,
     WriterCommitMessage,
 )
@@ -62,6 +60,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from hadoop_map_reduce_spark.sources.zip_datasource import _accepted_values
 
 WARC_RECORD_SCHEMA = StructType(
     [
@@ -191,25 +191,6 @@ def _read_archive_bytes(path: str) -> bytes:
             return fh.read()
     with open(path, "rb") as fh:
         return fh.read()
-
-
-def _accepted_values(
-    filters: list[Filter], column: str
-) -> tuple[set | None, list[Filter]]:
-    """EqualTo/In filters on ``column`` folded to an accept-set (AND
-    semantics: multiple filters intersect) — the zip source's device."""
-    accept: set | None = None
-    consumed: list[Filter] = []
-    for f in filters:
-        if isinstance(f, EqualTo) and f.attribute == (column,):
-            vals = {f.value}
-        elif isinstance(f, In) and f.attribute == (column,):
-            vals = set(f.value)
-        else:
-            continue
-        accept = vals if accept is None else accept & vals
-        consumed.append(f)
-    return accept, consumed
 
 
 class WarcArchivePartition(InputPartition):

@@ -13,6 +13,7 @@ from hadoop_map_reduce_spark.compat import map_reduce, run_bigram_job
 from hadoop_map_reduce_spark.functions.hashing import hadoop_partition
 
 ZUNI = Path("/root/reference/src/main/resources/sample/zuni.txt")
+PARITY = Path(__file__).parent / "data" / "bigram_parity.txt"
 
 
 def test_map_reduce_shim_wordcount(spark):
@@ -91,6 +92,37 @@ def test_bigram_job_output_contract(spark, tmp_path):
     assert all(k.isascii() for k in total)
     assert total["of+the"] == max(total.values())
     assert sum(total.values()) > 100_000
+
+
+def test_bigram_job_parity_fixture(spark, tmp_path):
+    """The reference's output contract on a committed fixture (non-ASCII,
+    ``_``-joined, punctuation-only, blank and one-token lines): 32 parts
+    plus _SUCCESS, each sorted, each key in its Text.hashCode % 32 file,
+    and counts equal to a pure-Python ``([^\\s\\w]|_)+`` (ASCII) recount."""
+    lines = PARITY.read_text(encoding="utf-8").split("\n")
+    expected = Counter()
+    for line in lines:
+        toks = re.sub(r"([^\s\w]|_)+", " ", line, flags=re.ASCII).lower().split()
+        expected.update(f"{a}+{b}" for a, b in zip(toks, toks[1:]))
+
+    out = tmp_path / "bigram_out"
+    run_bigram_job(spark, str(PARITY), str(out))
+
+    names = sorted(p.name for p in out.iterdir() if not p.name.startswith("."))
+    assert names == ["_SUCCESS"] + [f"part-{i:05d}" for i in range(32)]
+    got = Counter()
+    for pid in range(32):
+        kv = [line.split("\t") for line in (out / f"part-{pid:05d}").read_text(encoding="utf-8").splitlines()]
+        keys = [k for k, _ in kv]
+        assert keys == sorted(keys)
+        assert all(hadoop_partition(k, 32) == pid for k in keys)
+        for k, v in kv:
+            assert k not in got, k
+            got[k] = int(v)
+    assert got == expected
+    # The ASCII sanitizer splits words at ñ/é and drops 日本 entirely.
+    assert all(k.isascii() for k in got)
+    assert {"pi+on", "se+or", "hominy+stew"} <= got.keys()
 
 
 def test_run_cli_lists_and_runs(spark, sf_dir, capsys):

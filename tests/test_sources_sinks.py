@@ -9,6 +9,7 @@ invariants via the Hadoop Text.hashCode partitioner.
 from __future__ import annotations
 
 import io
+import random
 import re
 import zipfile
 from collections import Counter
@@ -16,7 +17,11 @@ from pathlib import Path
 
 import pytest
 
-from hadoop_map_reduce_spark.functions.hashing import hadoop_partition, hadoop_text_hash
+from hadoop_map_reduce_spark.functions.hashing import (
+    hadoop_partition,
+    hadoop_partition_col,
+    hadoop_text_hash,
+)
 from hadoop_map_reduce_spark.operators.bigram import bigram_counts
 from hadoop_map_reduce_spark.sinks import write_kv_text
 from hadoop_map_reduce_spark.sources import read_text_lines, read_zip_entries
@@ -72,6 +77,39 @@ def test_hadoop_text_hash_signed_bytes():
     for k in ("a", "of+the", "zuñi", "日本語", ""):
         h = hadoop_text_hash(k)
         assert -(1 << 31) <= h < (1 << 31)
+
+
+def _adversarial_keys() -> list[str]:
+    """Empty, ASCII, 2/3/4-byte UTF-8 (emoji included) and long keys."""
+    alphabets = [
+        "abcxyz+ _-.\t019",
+        "éñßüΩжא",
+        "日本語€中文한",
+        "😀🎉𝄞🍞",
+        "a\x00\x7f\x80ÿĀ\u07ff\u0800\uffff\U00010000\U0010ffff",
+    ]
+    rng = random.Random(7)
+    keys = ["", " ", "a", "of+the", "zuñi", "日本語", "😀", "x" * 5000, "é" * 3000]
+    for _ in range(400):
+        chars = "".join(rng.sample(alphabets, rng.randint(1, len(alphabets))))
+        keys.append("".join(rng.choice(chars) for _ in range(rng.randint(1, 40))))
+    keys += ["".join(rng.choice(alphabets[2] + alphabets[3]) for _ in range(700)) for _ in range(5)]
+    return keys
+
+
+def test_hadoop_partition_col_matches_python(spark):
+    """The SQL Text.hashCode partition id equals the Python oracle, in one
+    Spark round trip over adversarial keys; a null key gives null."""
+    from pyspark.sql import functions as F
+
+    keys = _adversarial_keys()
+    ns = (1, 7, 32)
+    df = spark.createDataFrame([(i, k) for i, k in enumerate(keys)] + [(-1, None)], "i int, k string")
+    rows = df.select("i", *[hadoop_partition_col(F.col("k"), n).alias(f"p{n}") for n in ns]).collect()
+    got = {r["i"]: tuple(r[f"p{n}"] for n in ns) for r in rows}
+    assert got.pop(-1) == (None, None, None)
+    mismatched = [keys[i] for i, ids in got.items() if ids != tuple(hadoop_partition(keys[i], n) for n in ns)]
+    assert len(got) == len(keys) and not mismatched, mismatched[:5]
 
 
 def _mk_zip(path: Path, entries: dict[str, bytes]) -> None:
@@ -181,9 +219,7 @@ def test_sink_exact_partition_count_when_default_matches(spark, sf_dir, tmp_path
     from hadoop_map_reduce_spark.sinks import write_kv_text
 
     # 50k distinct keys through the same shape as the bigram pipeline
-    # (aggregate shuffling on the sink key) so every hash bucket is
-    # non-empty — the default sink mode documents that empty partitions
-    # write no file.
+    # (aggregate shuffling on the sink key).
     counts = (
         spark.range(200_000)
         .select(F.concat(F.lit("w"), (F.col("id") % 50_000)).alias("w"))
@@ -198,8 +234,42 @@ def test_sink_exact_partition_count_when_default_matches(spark, sf_dir, tmp_path
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert len(sorted(out.glob("part-*"))) == 32
-    # And the scoped AQE override was restored.
+    # And the sink leaves the session's AQE conf as it found it.
     assert (
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
         == "true"
     )
+
+
+@pytest.mark.parametrize("hadoop_layout", [False, True])
+def test_kv_text_sink_exactly_n_parts_edge_cases(spark, tmp_path, hadoop_layout):
+    """Both modes write exactly part-00000..part-{n-1} plus _SUCCESS for
+    an empty and a one-row input; duplicate keys order by (key, value);
+    a null value writes the key alone, as Hadoop TextOutputFormat does."""
+    schema = "k string, v string"
+    cases = {
+        "empty": [],
+        "one": [("solo", "1")],
+        "dups": [("b", "2"), ("a", None), ("b", "10"), ("b", "1"), ("a", "x")],
+    }
+    written = {}
+    for name, rows in cases.items():
+        out = tmp_path / name
+        write_kv_text(
+            spark.createDataFrame(rows, schema), str(out), "k", "v",
+            num_partitions=5, hadoop_layout=hadoop_layout,
+        )
+        names = sorted(p.name for p in out.iterdir() if not p.name.startswith("."))
+        assert names == ["_SUCCESS"] + [f"part-{i:05d}" for i in range(5)], name
+        written[name] = [
+            line
+            for i in range(5)
+            for line in (out / f"part-{i:05d}").read_text().splitlines()
+        ]
+    assert written["empty"] == []
+    assert written["one"] == ["solo\t1"]
+    # Nulls sort first; values compare as strings ("10" < "2").
+    by_key = {}
+    for line in written["dups"]:
+        by_key.setdefault(line.split("\t")[0], []).append(line)
+    assert by_key == {"a": ["a", "a\tx"], "b": ["b\t1", "b\t10", "b\t2"]}

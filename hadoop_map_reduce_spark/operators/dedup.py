@@ -440,6 +440,11 @@ def _sig_udf(num_hashes: int, seed: int):
         return pd.Series(out)
 
     if app is not None:
+        # Only the live context's entries can ever be served again: drop
+        # the rest, so a process that restarts sessions keeps one
+        # context's worth of UDFs, not one per context it ever had.
+        for k in [k for k in _SIG_UDF_CACHE if k[2] != app]:
+            del _SIG_UDF_CACHE[k]
         _SIG_UDF_CACHE[key] = _sig
     return _sig
 
@@ -762,17 +767,6 @@ def _band_array_expr(bands: int, rows_per_band: int) -> Column:
     return F.expr(f"array({terms})")
 
 
-def _band_keys(
-    sig: DataFrame, bands: int, rows_per_band: int, id_col: str
-) -> DataFrame:
-    """Slim ``(id, band, bhash)`` banding keys of a signature table (the
-    same projection :func:`minhash_lsh_pairs` builds inline)."""
-    return sig.select(
-        F.col(id_col),
-        F.explode(_band_array_expr(bands, rows_per_band)).alias("_b"),
-    ).select(id_col, "_b.band", "_b.bhash")
-
-
 def lsh_blocked_ids(
     batch_sig: DataFrame,
     store_sig: DataFrame | None,
@@ -786,66 +780,53 @@ def lsh_blocked_ids(
     batch — the greedy, non-recursive admission rule of
     ``dedup_incremental``, factored over two signature tables.
 
-    Plan shape: banding keys for both sides, a band equi-join batch x
-    store plus a band self-join within the batch (id_a < id_b), exact
-    shingle-Jaccard verify on the candidates only, then a distinct
-    projection of the blocked batch ids. Cost is proportional to the
-    BATCH (the store side ships only slim band keys plus the shingle
-    arrays of actual candidates), which is what makes per-increment /
-    per-micro-batch dedup viable against a 100-TB corpus store."""
+    Plan shape: ONE band equi-join. The partner table is the batch
+    (``_st`` false) unioned with the store (``_st`` true), so the
+    within-batch and the against-store candidates share one join, and
+    the store is scanned once. Both sides explode to ``bands`` rows of
+    ``(band, bhash)`` and carry their shingle arrays, so the exact
+    Jaccard verify runs on the join output itself: no candidate dedup,
+    no verify joins. The id rule (``_st OR _q < _b``: the store side has
+    no id filter) and the verify share one filter, then the blocked
+    batch ids are made distinct. A pair that collides in k bands is
+    verified k times; at micro-batch sizes that costs less than the
+    ``dropDuplicates`` shuffle and the two shingle joins it replaces.
+
+    Cost trade-off: the partner shingles ride the PROBE side of the band
+    join. That is free while the batch key table (the batch's rows x
+    ``bands``) is small enough to broadcast, which is the per-micro-batch
+    regime: the store streams through the broadcast once, in proportion
+    to its size, and nothing store-sized is shuffled. Above the
+    broadcast threshold the join becomes a sort-merge join, and it would
+    shuffle ``bands`` rows per partner, each carrying its shingle array."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    rpb = num_hashes // bands
-    b_keys = _band_keys(batch_sig, bands, rpb, id_col)
+    band_keys = _band_array_expr(bands, num_hashes // bands)
 
-    jac = jaccard(F.col("sh_q"), F.col("sh_b"))
-    sh_batch = batch_sig.select(
-        F.col(id_col).alias("_blocked"), F.col("_sh").alias("sh_b")
-    )
-
-    def verify(cands: DataFrame, partner_sig: DataFrame) -> DataFrame:
-        sh_q = partner_sig.select(
-            F.col(id_col).alias("_q"), F.col("_sh").alias("sh_q")
-        )
-        return (
-            cands.join(sh_batch, "_blocked")
-            .join(sh_q, "_q")
-            .filter(F.round(jac, 6) >= threshold)
-            .select("_blocked")
+    def tagged(sig: DataFrame, in_store: bool) -> DataFrame:
+        return sig.select(
+            F.col(id_col).alias("_q"), F.lit(in_store).alias("_st"), "_sig", "_sh"
         )
 
-    self_cands = (
-        b_keys.alias("a")
-        .join(
-            b_keys.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"b.{id_col}").alias("_blocked"),
-            F.col(f"a.{id_col}").alias("_q"),
-        )
-        .dropDuplicates(["_blocked", "_q"])
-    )
-    blocked = verify(self_cands, batch_sig)
+    partners = tagged(batch_sig, False)
     if store_sig is not None:
-        s_keys = _band_keys(store_sig, bands, rpb, id_col)
-        store_cands = (
-            b_keys.alias("a")
-            .join(
-                s_keys.alias("s"),
-                (F.col("a.band") == F.col("s.band"))
-                & (F.col("a.bhash") == F.col("s.bhash")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("_blocked"),
-                F.col(f"s.{id_col}").alias("_q"),
-            )
-            .dropDuplicates(["_blocked", "_q"])
+        partners = partners.unionByName(tagged(store_sig, True))
+    b_keys = batch_sig.select(
+        F.col(id_col).alias("_b"), F.col("_sh").alias("sh_b"), F.inline(band_keys)
+    )
+    q_keys = partners.select(
+        "_q", "_st", F.col("_sh").alias("sh_q"), F.inline(band_keys)
+    )
+    jac = jaccard(F.col("sh_q"), F.col("sh_b"))
+    return (
+        b_keys.join(q_keys, ["band", "bhash"])
+        .filter(
+            (F.col("_st") | (F.col("_q") < F.col("_b")))
+            & (F.round(jac, 6) >= threshold)
         )
-        blocked = blocked.unionByName(verify(store_cands, store_sig))
-    return blocked.select(F.col("_blocked").alias(id_col)).distinct()
+        .select(F.col("_b").alias(id_col))
+        .distinct()
+    )
 
 
 def simhash64(

@@ -265,15 +265,22 @@ def _query_lut(
     )
 
 
-def _adc_sum_sql(m: int, ksub: int, *leading: str) -> str:
+def _adc_sum_sql(
+    m: int,
+    ksub: int,
+    *leading: str,
+    lut_col: str = "_lut",
+    codes_col: str = "pq_codes",
+) -> str:
     """The ADC score ``(leading +) Σ_j LUT[j][code_j]`` as one SQL
     string — strictly LEFT-ASSOCIATIVE addition in the original term
     order, so the double accumulation is bit-identical to the old
-    per-term Column chain."""
+    per-term Column chain. ``lut_col`` and ``codes_col`` name the LUT
+    array and the packed-code column the string refers to."""
     mask = (1 << CODE_BITS) - 1
     terms = list(leading) + [
-        f"element_at(_lut, CAST({j * ksub} + "
-        f"(shiftright(pq_codes, {CODE_BITS * j}) & {mask}) + 1 AS INT))"
+        f"element_at({lut_col}, CAST({j * ksub} + "
+        f"(shiftright({codes_col}, {CODE_BITS * j}) & {mask}) + 1 AS INT))"
         for j in range(m)
     ]
     return " + ".join(terms)
@@ -330,7 +337,9 @@ def pq_topk_adc(
 
     # One expression string for the m-term ADC sum (round-12, see
     # _adc_sum_sql — bit-identical left-associative order).
-    approx = F.expr(_adc_sum_sql(m, ksub))
+    approx = F.expr(
+        _adc_sum_sql(m, ksub, lut_col="_lut", codes_col="pq_codes")
+    )
 
     join_cond = (
         F.col("pq_id") != F.col("_qid") if exclude_self else F.lit(True)
@@ -620,7 +629,9 @@ def ivfpq_topk_adc(
 
     # One expression string for `_coarse + Σ_j LUT[j][code_j]` —
     # left-associative in the original term order (bit-identical).
-    approx = F.expr(_adc_sum_sql(m, ksub, "_coarse"))
+    approx = F.expr(
+        _adc_sum_sql(m, ksub, "_coarse", lut_col="_lut", codes_col="pq_codes")
+    )
     joined = encoded.join(F.broadcast(q), "cell")
     if keep_col is not None:
         joined = joined.filter(F.col(keep_col))

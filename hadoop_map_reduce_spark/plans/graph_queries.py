@@ -156,7 +156,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-iteration shuffle OR sort; only the dst aggregation exchanges.
     # Gated on the runtime count (scale-adaptive, see
     # _RANKS_BROADCAST_MAX); above the gate the prior shuffled shape
-    # stands unchanged.
+    # stands unchanged. The rank update sums doubles, so this float
+    # variant is ORDER-SENSITIVE: the two join shapes feed the partial
+    # aggregates in different row orders, and the sums can differ in
+    # the last ulp. Results are stable only up to the round(., 6) margin
+    # of the output (a value sitting on a 1e-6 rounding boundary could
+    # round differently); the converged variant below is order-free
+    # because it runs in exact integer arithmetic.
     small = n <= _RANKS_BROADCAST_MAX
     for _ in range(_ITERS):
         rhs = F.broadcast(ranks) if small else ranks

@@ -28,10 +28,12 @@ replay-safety contract.
 
 100-TB scale: signatures are computed ONCE per document ever (the store
 is the asset); per-batch cost is the batch's shingle/signature pass plus
-a band equi-join whose store side ships only slim ``(id, band, bhash)``
-keys — proportional to the batch, never the corpus. State lives in the
-store, not the streaming state store, so the stream itself is stateless
-and restarts are cheap.
+ONE band equi-join of the batch's keys against (batch ∪ store) partners,
+verified on the join output. The batch key table is the small,
+broadcast side; the store streams through it once, carrying its shingle
+arrays on the probe side, so nothing store-sized is shuffled. State
+lives in the store, not the streaming state store, so the stream itself
+is stateless and restarts are cheap.
 """
 
 from __future__ import annotations

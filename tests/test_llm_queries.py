@@ -112,6 +112,30 @@ def test_arrow_signature_null_and_empty_parity(spark):
     assert col[2] == [None] * 8 and col[3] == [None] * 8
 
 
+def test_sig_udf_cache_keeps_only_live_context(spark, monkeypatch):
+    """The signature-UDF cache evicts entries of dead contexts on insert:
+    a process that restarts sessions holds one context's worth of UDFs."""
+    from pyspark import SparkContext
+
+    from hadoop_map_reduce_spark.operators import dedup
+
+    cache: dict = {}
+    monkeypatch.setattr(dedup, "_SIG_UDF_CACHE", cache)
+    live = spark.sparkContext.applicationId
+    udf = dedup._sig_udf(8, 1)
+    assert dedup._sig_udf(8, 1) is udf  # served from the cache
+    dedup._sig_udf(16, 1)
+    assert set(cache) == {(8, 1, live), (16, 1, live)}
+
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: "app-fake"))
+    fake = dedup._sig_udf(8, 1)
+    assert fake is not udf
+    assert set(cache) == {(8, 1, "app-fake")}
+    # clear() (the A/B tools' reset) still empties it
+    cache.clear()
+    assert dedup._sig_udf(8, 1) is not fake and len(cache) == 1
+
+
 def test_ann_recall_vs_bruteforce(spark, sf_dir):
     """Single-probe LSH ANN keeps reasonable top-5 recall on this corpus."""
     exact = REGISTRY["similarity_topk"].fn(spark, sf_dir)

@@ -7,6 +7,7 @@ can't see."""
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -109,6 +110,106 @@ def test_blocking_plan_has_no_cartesian(spark, sf_dir):
     plan = blocked._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # One band equi-join serves both candidate sources (batch and store)
+    # and carries the shingles for the verify: no further join.
+    joins = re.findall(
+        r"\b(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)\b", plan
+    )
+    assert len(joins) == 1, plan
+
+
+def _text(*spans: tuple[int, int]) -> str:
+    """Words ``start .. start + n - 1`` of each ``(start, n)`` span, each
+    word a distinct letter-only token (its digits spelled a-j), so
+    sanitize/tokenize keep them as they are and every shared trigram is
+    one the spans share."""
+    return " ".join(
+        "w" + "".join(chr(ord("a") + int(d)) for d in str(i))
+        for start, n in spans
+        for i in range(start, start + n)
+    )
+
+
+# Store: a long doc, a short doc, an 8-trigram doc, and one unrelated doc.
+_STORE_DOCS = [
+    (10, _text((0, 30))),
+    (20, "tiny doc"),
+    (30, _text((100, 10))),
+    (5, _text((300, 40))),
+]
+# Batch: each row is one adversarial case for the admission rule.
+_BATCH_DOCS = [
+    # same doc_id as a store doc, one token changed: J = 27/29, blocks
+    # (the store side has no id filter)
+    (10, _text((0, 29), (500, 1))),
+    # identical texts: only the higher id is blocked
+    (40, _text((200, 40))),
+    (41, _text((200, 40))),
+    # a doc_id repeated inside the batch with the same text: no self-block
+    (50, _text((400, 40))),
+    (50, _text((400, 40))),
+    # too short to shingle, identical to each other and to store doc 20
+    (60, "tiny doc"),
+    (61, "tiny doc"),
+    # store doc 30's 8 trigrams plus 8 new ones: J = 8/16 = 0.5, blocks
+    (70, _text((100, 10), (600, 8))),
+    # plus 9 new ones: J = 8/17 < 0.5 against 30, and 8/25 against 70
+    (80, _text((100, 10), (700, 9))),
+]
+_DOC_SCHEMA = "doc_id long, text string"
+
+
+def _greedy_blocked(batch, store, threshold=0.5):
+    """The admission rule in pure Python over the same trigram shingles:
+    blocked iff a store doc, or a batch doc with a lower id, has
+    round(Jaccard, 6) >= threshold."""
+    def sh(text):
+        toks = text.split()
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+    def near(a, b):
+        return bool(a) and bool(b) and round(len(a & b) / len(a | b), 6) >= threshold
+
+    b = [(i, sh(t)) for i, t in batch]
+    s = [sh(t) for _, t in store]
+    return {
+        i for i, x in b
+        if any(near(x, y) for y in s) or any(near(x, y) for q, y in b if q < i)
+    }
+
+
+def test_lsh_blocked_ids_matches_greedy_rule_on_adversarial_docs(spark):
+    batch_sig = minhash_sig_table(spark.createDataFrame(_BATCH_DOCS, _DOC_SCHEMA))
+    store_sig = minhash_sig_table(spark.createDataFrame(_STORE_DOCS, _DOC_SCHEMA))
+    for store, docs, expect in (
+        (store_sig, _STORE_DOCS, {10, 41, 70}),
+        (None, [], {41}),
+    ):
+        blocked = {r.doc_id for r in lsh_blocked_ids(batch_sig, store, 0.5).collect()}
+        assert blocked == _greedy_blocked(_BATCH_DOCS, docs) == expect
+
+
+def test_apply_batch_job_count(spark, tmp_path):
+    """Count pin, not a timing pin: one micro-batch against a seeded
+    store runs a fixed number of Spark jobs (the blocking join, the
+    store and manifest writes). Also pins the admission outcome: short
+    docs are admitted but contribute no signature to the store."""
+    admitter = NearDupAdmitter(str(tmp_path / "store"), threshold=0.5)
+    admitter.seed(spark.createDataFrame(_STORE_DOCS, _DOC_SCHEMA))
+    batch = spark.createDataFrame(_BATCH_DOCS, _DOC_SCHEMA)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    admitter.apply_batch(batch, 0)
+    jobs = scheduler.numTotalJobs() - before
+    assert jobs <= 12, jobs
+
+    admitted = sorted(r.doc_id for r in admitter.result(spark).collect())
+    assert admitted == [40, 50, 50, 60, 61, 80]
+    stored = sorted(
+        r.doc_id
+        for r in spark.read.parquet(str(tmp_path / "store" / "b0")).collect()
+    )
+    assert stored == [40, 50, 50, 80]
 
 
 def test_phash_blocked_ids_matches_exact_hamming_rule(spark, sf_dir):

@@ -87,7 +87,7 @@ def bpe_train(
     from hadoop_map_reduce_spark.checkpoint import local_checkpoint
 
     words = _word_counts(docs, text_col)
-    state, release = local_checkpoint(
+    state, release, _ = local_checkpoint(
         words.select(
             "cnt",
             F.concat(
@@ -128,7 +128,7 @@ def bpe_train(
             )
             merges.append((rank, lhs, rhs, n))
             prev_release = release
-            state, release = local_checkpoint(
+            state, release, _ = local_checkpoint(
                 state.select(
                     "cnt", _merge_pair(F.col("syms"), lhs, rhs).alias("syms")
                 )

@@ -836,6 +836,11 @@ _KCORE_BROADCAST_MAX = 1_000_000
 _KCORE_COALESCE_ROWS = 65_536
 
 
+def _no_release() -> None:
+    """Release handle of the round-1 degree checkpoint in the rounds
+    that take none (k-core rounds 2..n)."""
+
+
 def _kcore_oracle() -> str:
     rounds = []
     for i in range(1, _KCORE_ROUNDS + 1):
@@ -916,9 +921,10 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
       unchanged SET; an unchanged kept set filters e to itself, making
       every remaining round the identity — the round-8 census equals
       the fixpoint census EXACTLY (same rule the graph_kcore_converged
-      oracle re-derives in SQL). Detection reads the count of the
-      already-materialized kept set: bounded scalar metadata, the
-      sanctioned collect class.
+      oracle re-derives in SQL). Detection reads the kept-set row
+      count observed on the kept set's own checkpoint job (a
+      ``local_checkpoint`` counter): no action of its own, and the
+      edge count of every round rides the edge checkpoint the same way.
     * the semi-join build side is broadcast explicitly when the
       just-measured kept count is broadcast-safe (the planner sees an
       RDD leaf with no stats; the driver KNOWS the row count) — at
@@ -933,8 +939,10 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only freed at driver GC, accumulating across bench invocations in
     # one session); this query fully materializes before returning, so
     # nothing stays persisted after it.
-    e, rel_e = local_checkpoint(_copurchase_edges(spark, sf_dir))
-    n_edges0 = e.count()
+    e, rel_e, seen = local_checkpoint(
+        _copurchase_edges(spark, sf_dir), n=F.count(F.lit(1))
+    )
+    n_edges0 = seen["n"]
     e_cnt = n_edges0  # |e_i|, tracked per round (also the final census)
     par = spark.sparkContext.defaultParallelism
     # The threshold k = floor(2|E|/|V|) derives from round 1's degree
@@ -947,6 +955,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes: int | None = None
     prev_cnt: int | None = None  # |keep_{i-1}|
     keep_cnt: int | None = None  # |keep_i|
+    rel_deg = _no_release
     for _ in range(_KCORE_ROUNDS):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -955,23 +964,25 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         if k_val is None:
-            # Round 1 only: |V| comes from the materialized degree
-            # table; later rounds checkpoint just the (smaller) kept
-            # set — one eager job per round, not two.
-            deg, rel_keep = local_checkpoint(deg)
-            n_nodes = deg.count()
-            k_val = (2 * n_edges0) // n_nodes if n_nodes else None
-            if k_val is None:
+            # Round 1 only: k needs |V|, the row count of the degree
+            # table, before the kept set can be filtered — so the
+            # degree table is checkpointed (counting itself) and the
+            # kept set is a 1-job filter of that leaf. Later rounds
+            # checkpoint just the (smaller) kept set.
+            deg, rel_deg, seen = local_checkpoint(deg, n=F.count(F.lit(1)))
+            n_nodes = seen["n"]
+            if not n_nodes:
                 keep_cnt = 0
                 prev_cnt = 0
-                rel_keep()
+                rel_deg()
                 break
-            keep = deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-        else:
-            keep, rel_keep = local_checkpoint(
-                deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-            )
-        cnt = keep.count()
+            k_val = (2 * n_edges0) // n_nodes
+        keep, rel_keep, seen = local_checkpoint(
+            deg.filter(F.col("d") >= F.lit(k_val)).select("node"),
+            n=F.count(F.lit(1)),
+        )
+        rel_deg()
+        cnt = seen["n"]
         if keep_cnt is not None and cnt == keep_cnt:
             # Fixpoint: this round's kept set equals the previous
             # round's, so e is already filtered to it and every
@@ -992,11 +1003,11 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = (e_cnt + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
         if 0 < p < par:
             pruned = pruned.coalesce(p)
-        new_e, rel_new = local_checkpoint(pruned)
+        new_e, rel_new, seen = local_checkpoint(pruned, n=F.count(F.lit(1)))
         rel_e()
         rel_keep()
         e, rel_e = new_e, rel_new
-        e_cnt = e.count()
+        e_cnt = seen["n"]
     n_prev = prev_cnt if prev_cnt is not None else n_nodes
     rel_e()
     return spark.createDataFrame(
@@ -1096,8 +1107,9 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — bounded metadata, the sanctioned collect class). At 100 TB:
     round count is degree-distribution-bounded (measured 3-4 here),
     each round shuffles narrow integer pairs only, and detection adds
-    one count action per round — the same scalar the peel's own
-    progress logging would read.
+    no action: the kept and edge counts are counters observed on the
+    round's own checkpoint jobs (``local_checkpoint``) — the same
+    scalars the peel's own progress logging would read.
 
     Monotonicity argument for exact detection: e_i ⊆ e_{i-1} ⇒ every
     degree is non-increasing ⇒ keep_{i+1} ⊆ keep_i; equal COUNTS of
@@ -1108,8 +1120,8 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed-keep restructure as graph_kcore_bounded — e is
     # checkpointed FIRST (nodes/threshold derive from the leaf, so the
     # lineitem self-join runs once, not three times), the kept set is
-    # checkpointed before counting (previously keep.count() re-ran the
-    # degree aggregate the e-prune job had just computed), and the
+    # checkpointed and counted by its own checkpoint job (a separate
+    # keep.count() would re-run the degree aggregate), and the
     # semi-join build side is broadcast while the just-measured kept
     # count is broadcast-safe. Trajectory values are unchanged: at the
     # fixpoint round e_i == e_{i-1}, so the recorded edge count is the
@@ -1120,14 +1132,18 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesce, exactly as graph_kcore_bounded (the trajectory values
     # are untouched — release/coalesce only manage block storage and
     # task counts of already-materialized leaves).
-    e, rel_e = local_checkpoint(_copurchase_edges(spark, sf_dir))
-    e_cnt = e.count()
+    e, rel_e, seen = local_checkpoint(
+        _copurchase_edges(spark, sf_dir), n=F.count(F.lit(1))
+    )
+    e_cnt = seen["n"]
     par = spark.sparkContext.defaultParallelism
     # Threshold from round 1's degree table, exact integer division —
-    # see graph_kcore_bounded (same round-11 restructure).
+    # see graph_kcore_bounded (same round-11 restructure, same
+    # self-counting degree checkpoint in round 1).
     k_val: int | None = None
     prev_kept: int | None = None
     trajectory: list[tuple[int, int, int]] = []
+    rel_deg = _no_release
     for i in range(1, _KCORE_MAX_ROUNDS + 1):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -1136,15 +1152,15 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         if k_val is None:
-            deg, rel_keep = local_checkpoint(deg)
-            prev_kept = deg.count()  # |V|: round 0 keeps every node
+            deg, rel_deg, seen = local_checkpoint(deg, n=F.count(F.lit(1)))
+            prev_kept = seen["n"]  # |V|: round 0 keeps every node
             k_val = (2 * e_cnt) // prev_kept
-            keep = deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-        else:
-            keep, rel_keep = local_checkpoint(
-                deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-            )
-        kept = keep.count()
+        keep, rel_keep, seen = local_checkpoint(
+            deg.filter(F.col("d") >= F.lit(k_val)).select("node"),
+            n=F.count(F.lit(1)),
+        )
+        rel_deg()
+        kept = seen["n"]
         if kept == prev_kept:
             # Fixpoint: the kept set equals last round's, e is already
             # filtered to it (e_i == e_{i-1}), so this round's edge
@@ -1163,11 +1179,11 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = (e_cnt + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
         if 0 < p < par:
             pruned = pruned.coalesce(p)
-        new_e, rel_new = local_checkpoint(pruned)
+        new_e, rel_new, seen = local_checkpoint(pruned, n=F.count(F.lit(1)))
         rel_e()
         rel_keep()
         e, rel_e = new_e, rel_new
-        e_cnt = e.count()
+        e_cnt = seen["n"]
         trajectory.append((i, kept, e_cnt))
         prev_kept = kept
     rel_e()
@@ -1373,8 +1389,9 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     #5): per-round eager localCheckpoint keeps the plan constant-size
     (a 77-round lazy chain would otherwise be a 77-deep join tree at
     analysis time), the previous round's blocks are released once the
-    next is materialized, and convergence is read from a 1-row scalar
-    collect. At 100 TB: edges pre-partition on src once (the
+    next is materialized, and convergence is read from SUM(r), a
+    counter observed on each round's own checkpoint job
+    (``local_checkpoint``) — no aggregate action per round. At 100 TB: edges pre-partition on src once (the
     checkpoint cache preserves the layout); ranks (n_nodes rows) are
     the only per-round shuffle; round count is data-bounded at
     ~log(SCALE)/log(1/damping), independent of graph size.
@@ -1385,7 +1402,7 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _edges(spark, sf_dir)
     # Same single-exchange outdeg window as graph_pagerank (round-11).
-    ew, release_ew = local_checkpoint(
+    ew, release_ew, _ = local_checkpoint(
         edges.withColumn(
             "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
         )
@@ -1424,12 +1441,12 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("r")
                 )
             )
-            nxt, next_release = local_checkpoint(nxt)
+            nxt, next_release, seen = local_checkpoint(nxt, r=F.sum("r"))
             if release is not None:
                 release()
             release = next_release
             ranks = nxt
-            cur_sum = ranks.agg(F.sum("r")).first()[0]
+            cur_sum = seen["r"]
             if cur_sum == prev_sum:
                 return ranks.select(
                     "node", F.col("r").alias("rank_e9")

@@ -181,6 +181,40 @@ def register_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# Inferred parquet schemas, one entry per absolute path:
+# path -> (fingerprint, StructType). See load_table.
+_SCHEMAS: dict = {}
+
+
+def _schema_fingerprint(spark: SparkSession, path: str):
+    """``(size, mtime_ns)`` of every file under ``path`` (one
+    ``os.stat`` each, no Spark job) plus the inference confs; ``None``
+    when the local file system does not have ``path`` (a remote URI or a
+    missing table), which is never cached."""
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs
+        )
+    elif os.path.isfile(path):
+        files = [path]
+    else:
+        return None
+    stats = []
+    for f in files:
+        st = os.stat(f)
+        stats.append((f, st.st_size, st.st_mtime_ns))
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return tuple(stats), confs
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one synthetic-table parquet from an sf directory.
 
@@ -202,12 +236,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     every tz-dependent scalar (``hour``, ``unix_timestamp``, …) — is only
     deterministic and oracle-consistent (DuckDB treats naive timestamps
     as UTC wall clock) when the session zone is UTC.
+
+    Schema inference is a Spark job (it reads the parquet footers), and
+    it used to be the only job most queries ran while building their
+    plan. The inferred ``StructType`` is therefore cached and later
+    loads read with ``spark.read.schema(cached)``, which runs no job.
+    The cache key is the absolute path, ``(size, mtime_ns)`` of every
+    file under it and every session conf that changes inference, so a
+    table rewritten in place, or read under different inference confs,
+    is inferred again: the cache cannot serve a stale schema. The
+    ``events.ts`` normalisation below runs on the cached dtype as well.
     """
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = os.path.abspath(path)
+    fingerprint = _schema_fingerprint(spark, key)
+    cached = _SCHEMAS.get(key)
+    if fingerprint is not None and cached and cached[0] == fingerprint:
+        df = spark.read.schema(cached[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if fingerprint is not None:
+            _SCHEMAS[key] = (fingerprint, df.schema)
     ts_type = dict(df.dtypes).get("ts")
     if name == "events" and ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -57,3 +57,33 @@ def test_events_query_runs_on_bare_session(bare_conf_spark, sf_dir):
 
     df = entry_mod.queries()["events_hourly"](bare_conf_spark, sf_dir)
     assert df.count() > 0
+
+
+def test_events_ts_normalised_on_schema_cache_hit(bare_conf_spark, tmp_path):
+    """Both raw ``events.ts`` encodings (nanosecond parquet, read as
+    long, and naive microseconds, read as TIMESTAMP_NTZ) are normalised
+    to TIMESTAMP on a cached-schema load too, which runs no job."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    epoch = dt.datetime(1970, 1, 1)
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901), dt.datetime(2024, 5, 6)]
+    scheduler = bare_conf_spark.sparkContext._jsc.sc().dagScheduler()
+    for unit in ("ns", "us"):
+        d = tmp_path / unit
+        d.mkdir()
+        pq.write_table(
+            pa.table({"ts": pa.array(ts, pa.timestamp(unit))}),
+            d / "events.parquet",
+        )
+        cold = load_table(bare_conf_spark, str(d), "events")
+        before = scheduler.numTotalJobs()
+        warm = load_table(bare_conf_spark, str(d), "events")
+        assert scheduler.numTotalJobs() == before, unit  # a cache hit
+        assert dict(warm.dtypes)["ts"] == "timestamp", unit
+        micros = [r[0] for r in warm.select(F.unix_micros("ts")).collect()]
+        assert micros == [(t - epoch) // dt.timedelta(microseconds=1) for t in ts]
+        assert warm.collect() == cold.collect(), unit

@@ -35,3 +35,43 @@ def test_degree_hist_totals(spark, oracle_sf_dir):
     n_nodes = sum(r.n_nodes for r in hist)
     n_ranks = REGISTRY["graph_pagerank"].fn(spark, oracle_sf_dir).count()
     assert n_nodes == n_ranks > 0
+
+
+def test_kcore_matches_pure_python_peel(spark, sf_dir):
+    """Both k-core queries against a pure-Python peel of the same edge
+    list: every round unrolled (no early exit), so the engine's
+    fixpoint shortcut and its checkpoint-observed counts are checked
+    against plain set arithmetic."""
+    from hadoop_map_reduce_spark.plans.graph_queries import (
+        _KCORE_MAX_ROUNDS,
+        _KCORE_ROUNDS,
+        _copurchase_edges,
+    )
+
+    e = {(r.u, r.v) for r in _copurchase_edges(spark, sf_dir).collect()}
+    nodes = {x for uv in e for x in uv}
+    k = 2 * len(e) // len(nodes)
+    kept = [nodes]
+    edges = [e]
+    for _ in range(max(_KCORE_ROUNDS, _KCORE_MAX_ROUNDS)):
+        deg: dict[int, int] = {}
+        for u, v in edges[-1]:
+            deg[u] = deg.get(u, 0) + 1
+            deg[v] = deg.get(v, 0) + 1
+        keep = {x for x, d in deg.items() if d >= k}
+        kept.append(keep)
+        edges.append({(u, v) for u, v in edges[-1] if u in keep and v in keep})
+
+    r = _KCORE_ROUNDS
+    bounded = REGISTRY["graph_kcore_bounded"].fn(spark, sf_dir).collect()
+    assert [tuple(row) for row in bounded] == [
+        (k, len(kept[r]), len(edges[r]), len(kept[r - 1]) - len(kept[r]))
+    ]
+
+    fix = next(
+        i for i in range(1, len(kept)) if len(kept[i]) == len(kept[i - 1])
+    )
+    converged = REGISTRY["graph_kcore_converged"].fn(spark, sf_dir).collect()
+    assert sorted(tuple(row) for row in converged) == [
+        (k, i, len(kept[i]), len(edges[i])) for i in range(1, fix + 1)
+    ]

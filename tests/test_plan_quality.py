@@ -9,6 +9,7 @@ whole input.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -721,3 +722,55 @@ def test_manifest_diff_single_gate_scan(spark, sf_dir):
     # The expensive tokenizer regex must not appear in the join plan
     # itself (it lives only inside the cached relation).
     assert "regexp_extract_all" not in p.split("InMemoryRelation")[0]
+
+
+# Spark jobs each query runs while its plan is built, warm (schemas
+# already inferred), on the sf0.001 tables. The five non-graph board
+# queries build with no job at all; k-core's jobs are all eager
+# checkpoints whose counters carry every count the peel reads. Job
+# counts do not drift between runs, so the pin is exact.
+_CONSTRUCT_JOBS = {
+    "bigram_count": 0,
+    "q3_shipping_priority": 0,
+    "multimodal_phash_neardup": 0,
+    "similarity_topk": 0,
+    "text_quality": 0,
+    "graph_kcore_bounded": 11,
+    "graph_kcore_converged": 11,
+}
+
+
+def test_construct_jobs_are_checkpoints_only(spark, sf_dir, monkeypatch):
+    import hadoop_map_reduce_spark.checkpoint as ckpt
+    from hadoop_map_reduce_spark.operators import caching
+
+    # A plan another query left cached (the triangle queries keep the
+    # co-purchase edges in a cache slot) would serve k-core's edge build
+    # and change its job count: pin the counts against an empty cache.
+    spark.catalog.clearCache()
+    caching._SLOTS.clear()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    in_checkpoints = 0
+    real = ckpt.local_checkpoint
+
+    def counted(df, **counters):
+        nonlocal in_checkpoints
+        before = scheduler.numTotalJobs()
+        try:
+            return real(df, **counters)
+        finally:
+            in_checkpoints += scheduler.numTotalJobs() - before
+
+    monkeypatch.setattr(ckpt, "local_checkpoint", counted)
+    got = {}
+    for name in _CONSTRUCT_JOBS:
+        REGISTRY[name].fn(spark, sf_dir)  # cold build: infers schemas
+        in_checkpoints = 0
+        before = scheduler.numTotalJobs()
+        REGISTRY[name].fn(spark, sf_dir)
+        got[name] = scheduler.numTotalJobs() - before
+        assert got[name] == in_checkpoints, name
+    if os.path.basename(os.path.normpath(sf_dir)) == "sf0.001":
+        assert got == _CONSTRUCT_JOBS
+    else:
+        assert all(got[n] == 0 for n in got if "kcore" not in n), got

@@ -3,7 +3,8 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet tables (default
 sf0.01), comparing row counts, column names, and order-insensitive
-values. Usage: ``python tools/verify_contract.py [sf_dir]``.
+values. Usage: ``python tools/verify_contract.py [--bare] [--only q1,q2]
+[sf_dir]``; ``--only`` checks just the named queries.
 """
 import sys
 from pathlib import Path
@@ -20,6 +21,16 @@ import duckdb
 # must make every query work on such a session.
 args = [a for a in sys.argv[1:] if a != "--bare"]
 BARE = len(args) != len(sys.argv) - 1
+qs, oracles = e.queries(), e.oracle_sql()
+if "--only" in args:
+    i = args.index("--only")
+    names = args[i + 1] if i + 1 < len(args) else ""
+    only = [n for n in names.split(",") if n]
+    unknown = sorted(set(only) - qs.keys())
+    if not only or unknown:
+        sys.exit(f"--only needs known query names: {unknown or 'none given'}")
+    qs = {name: qs[name] for name in only}
+    del args[i : i + 2]
 builder = SparkSession.builder.master("local[8]").config(
     "spark.ui.enabled", "false"
 )
@@ -41,7 +52,6 @@ con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-qs, oracles = e.queries(), e.oracle_sql()
 fails = []
 for name, fn in qs.items():
     try:

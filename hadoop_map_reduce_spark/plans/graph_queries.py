@@ -29,27 +29,36 @@ _SUPP_OFFSET = 1_000_000
 _DAMP = 0.85
 _ITERS = 3
 
-# Broadcast the per-iteration rank vector into the edges⋈ranks join only
-# while its just-counted row count is comfortably inside the broadcast
-# budget. Round-12 sizing (ADVICE r11 #2): a hashed relation costs far
-# more than the raw 16 key+value bytes per row (UnsafeRow + long-map
-# overhead, several x), so the cap budgets ~64 bytes/row — 1M rows ≈
-# 64 MB built, matching the session's autoBroadcastJoinThreshold. The
-# decision input is the runtime count, so behavior stays scale-adaptive:
-# a 100 TB graph with |V| > 1M falls back to the shuffled join shape.
-_RANKS_BROADCAST_MAX = 1_000_000
+# The iterative queries broadcast a relation whose row count the driver
+# has just read (the PageRank rank vector, the k-core kept set) into
+# their per-round join, but only up to this many rows. The planner sees
+# a checkpointed RDD leaf with no statistics, so it cannot make this
+# choice itself. A hashed relation costs several times its 16 raw
+# key+value bytes per row (UnsafeRow and hash-map overhead), so the cap
+# budgets ~64 bytes/row: 1M rows ≈ 64 MB built, the session's
+# autoBroadcastJoinThreshold. Past the cap the plain join stands and
+# AQE picks the strategy, so a graph with more nodes than that keeps
+# the shuffled shape.
+_BROADCAST_MAX_ROWS = 1_000_000
 
-_GRAPH_SQL = f"""
+
+def _graph_sql(materialized: bool = False) -> str:
+    """The ``e0``/``edges``/``deg`` CTEs of the customer–supplier graph
+    for the DuckDB oracles; ``materialized`` marks ``edges`` and ``deg``
+    ``AS MATERIALIZED`` for the deep unrolls that reference them in
+    every round."""
+    m = "MATERIALIZED " if materialized else ""
+    return f"""
     e0 AS (
         SELECT DISTINCT o_custkey AS c, l_suppkey + {_SUPP_OFFSET} AS s
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     ),
-    edges AS (
+    edges AS {m}(
         SELECT c AS src, s AS dst FROM e0
         UNION ALL
         SELECT s AS src, c AS dst FROM e0
     ),
-    deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)
+    deg AS {m}(SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)
 """
 
 
@@ -73,6 +82,30 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rank_inputs(spark: SparkSession, sf_dir: str):
+    """The inputs both PageRank queries iterate over: ``(ew, nodes, n,
+    release)``. ``ew`` is every directed edge with its source's
+    ``outdeg``, checkpointed once so no round re-runs the
+    orders⋈lineitem edge build; ``nodes`` is its source set and ``n``
+    that set's size. ``release`` frees ``ew``'s blocks and must wait
+    until every plan reading ``ew`` has run.
+
+    ``outdeg`` is a window count partitioned by ``src``: one exchange
+    of the edge stream instead of a separate degree aggregate plus an
+    equi-join back onto the edges."""
+    from pyspark.sql import Window
+
+    from hadoop_map_reduce_spark.checkpoint import local_checkpoint
+
+    ew, release, _ = local_checkpoint(
+        _edges(spark, sf_dir).withColumn(
+            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+        )
+    )
+    nodes = ew.select(F.col("src").alias("node")).distinct()
+    return ew, nodes, nodes.count(), release
+
+
 def _pagerank_oracle() -> str:
     # Unrolled fixed-iteration CTE chain: r0 = 1/n, r{k} from r{k-1}.
     steps = []
@@ -87,7 +120,7 @@ def _pagerank_oracle() -> str:
         GROUP BY e.dst
     )""")
     return f"""
-    WITH {_GRAPH_SQL},
+    WITH {_graph_sql()},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     nn AS (SELECT COUNT(*) AS n FROM nodes),
     r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS r FROM nodes),
@@ -98,11 +131,9 @@ def _pagerank_oracle() -> str:
 
 @register(
     "graph_pagerank",
-    # Round-11 bench rotation (VERDICT r10 #6): the bounded-round bench
-    # representative of the converged-PageRank discipline — same
-    # per-round plan (one rank shuffle + checkpoint) at a fixed 3
-    # rounds, so its timing tracks the iterative engine path without
-    # the convergence-length variance a headline pin cannot carry.
+    # The headline representative of the iterative PageRank path: the
+    # converged query's per-round plan at a fixed 3 rounds, so its time
+    # carries no convergence-length variance.
     headline=True,
     tags=("graph", "iterative"),
     description=(
@@ -115,55 +146,30 @@ def _pagerank_oracle() -> str:
     oracle=_pagerank_oracle(),
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per iteration: edges⋈ranks on src (both sides hash-partitioned on
-    the same key → one exchange for ranks, edges reused from cache), then
-    one aggregation keyed dst. Undirected edges mean no dangling mass and
-    a stable node set, so no driver-side convergence count is needed —
-    the loop is fixed-length and fully lazy until the final collect.
+    """Per iteration: edges⋈ranks on src, then one aggregation keyed
+    dst. Undirected edges mean no dangling mass and a stable node set,
+    so no driver-side convergence count is needed — the loop is
+    fixed-length and lazy until the caller's action.
 
-    At 100 TB: edges are the big side — pre-partition them on src once
-    (the cache preserves partitioning across iterations) and let ranks
-    (n_nodes rows, small) shuffle to them each round; skewed hub nodes
-    split via AQE exactly like any hot aggregation key.
+    The rank vector has ``n`` rows, small next to the edge stream, so
+    it is broadcast into every round's join (up to
+    ``_BROADCAST_MAX_ROWS``): the checkpointed edges stream with no
+    per-round shuffle or sort and only the dst aggregation exchanges.
+    The update sums doubles, so this float variant is order-sensitive:
+    the broadcast and shuffled join shapes feed the partial aggregates
+    in different row orders and the sums can differ in the last ulp.
+    Results are stable up to the round(., 6) margin of the output (a
+    value on a 1e-6 rounding boundary could round differently); the
+    converged variant below is order-free because it runs in exact
+    integer arithmetic.
+
+    ``ew``'s checkpoint is not released here: the returned plan reads
+    it when the caller runs it. Its blocks are freed when Spark's
+    context cleaner collects the checkpointed RDD.
     """
-    # Round-11 (optimization round, guide §1.2/§5): the previous
-    # persist() was unpersisted in a `finally` that ran when this
-    # function RETURNED — i.e. before the caller's action executed —
-    # so the CacheManager never substituted the cached relation and
-    # every iteration re-ran the orders⋈lineitem edge build (measured:
-    # 3.87 s median for 3 iterations at sf0.1). An eager
-    # ``localCheckpoint`` materializes (edges ⋈ outdeg) exactly once
-    # per invocation with no unpersist bookkeeping; the RDD is freed
-    # with the DataFrame. 3.87 s -> see OPTIMIZATION_r11.md.
-    from pyspark.sql import Window
-
-    edges = _edges(spark, sf_dir)
-    # outdeg rides a window count over the SAME src partitioning the
-    # union already needs — one exchange of the edge stream, replacing
-    # the separate degree aggregation + equi-join (guide §2.4: two
-    # operations keyed the same way share one exchange; measured warm
-    # 2.1-2.5 s -> 1.1-1.3 s for the ew build at sf0.1).
-    ew = edges.withColumn(
-        "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).localCheckpoint(eager=True)
-    nodes = ew.select(F.col("src").alias("node")).distinct()
-    n = nodes.count()
+    ew, nodes, n, _ = _rank_inputs(spark, sf_dir)
     ranks = nodes.select("node", F.lit(1.0 / n).alias("r"))
-    # Round-12 (optimization round, guide §3.1 / VERDICT r11 #1): the
-    # rank vector is |V| rows by construction (n is the just-counted
-    # value), tiny next to the edge stream — broadcast it into every
-    # iteration's join so the checkpointed edge table streams with no
-    # per-iteration shuffle OR sort; only the dst aggregation exchanges.
-    # Gated on the runtime count (scale-adaptive, see
-    # _RANKS_BROADCAST_MAX); above the gate the prior shuffled shape
-    # stands unchanged. The rank update sums doubles, so this float
-    # variant is ORDER-SENSITIVE: the two join shapes feed the partial
-    # aggregates in different row orders, and the sums can differ in
-    # the last ulp. Results are stable only up to the round(., 6) margin
-    # of the output (a value sitting on a 1e-6 rounding boundary could
-    # round differently); the converged variant below is order-free
-    # because it runs in exact integer arithmetic.
-    small = n <= _RANKS_BROADCAST_MAX
+    small = n <= _BROADCAST_MAX_ROWS
     for _ in range(_ITERS):
         rhs = F.broadcast(ranks) if small else ranks
         ranks = (
@@ -359,7 +365,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "this graph)."
     ),
     oracle=f"""
-        WITH {_GRAPH_SQL}
+        WITH {_graph_sql()}
         SELECT outdeg AS degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
         FROM deg GROUP BY outdeg
     """,
@@ -809,50 +815,45 @@ def graph_cc_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_kcore_bounded (round-8): k-core peeling, unrolled round budget
+# k-core peeling: graph_kcore_bounded (census after a fixed round budget)
+# and graph_kcore_converged (per-round trajectory to the fixpoint) share
+# one peel loop and one oracle unroll
 # ---------------------------------------------------------------------------
 
 _KCORE_ROUNDS = 8
+_KCORE_MAX_ROUNDS = 12  # measured fixpoints at 3-4 (sf0.001/0.01); 3x margin
 
-# Broadcast the kept-node set into the peeling semi-joins only while its
-# just-measured count is comfortably inside the session broadcast budget.
-# Round-12 re-sizing (ADVICE r11 #2): the old 4M cap budgeted raw key
-# bytes (~8/row), but a LongHashedRelation costs several times that in
-# UnsafeRow + map overhead — 1M longs ≈ 64 MB built, matching the
-# session's autoBroadcastJoinThreshold. Past the cap the plain semi-join
-# shape stands and AQE picks the strategy — scale-adaptive, not a
-# local[32] constant (the decision input is the runtime count).
-_KCORE_BROADCAST_MAX = 1_000_000
-
-# Tail-round task-count control (round-12, guide §2.2): the kept set
-# collapses after the first rounds (sf0.1: 20k -> 10118 -> 71 -> 0), so
-# later rounds would otherwise run full-width jobs over near-empty
-# checkpointed edge tables. Before each round's checkpoint the edge
-# stream is coalesced to ceil(prev_edge_count / _KCORE_COALESCE_ROWS)
-# partitions — but ONLY when that is below the session's default
-# parallelism, so an at-scale peel (edge count >> cores) keeps its
-# shuffle layout untouched and the coalesce can never reduce a big
-# round's parallelism. 65536 16-byte edge rows ≈ 1 MB per partition.
+# The kept set collapses after the first rounds (sf0.1: 20k -> 10118 ->
+# 71 -> 0), so the tail rounds would run full-width jobs over near-empty
+# edge tables. Before each round's edge checkpoint the pruned edges are
+# coalesced to ceil(previous edge count / _KCORE_COALESCE_ROWS)
+# partitions, but only when that is below the default parallelism: a
+# peel whose edge count dwarfs the core count keeps its shuffle layout.
+# 65536 16-byte edge rows ≈ 1 MB per partition.
 _KCORE_COALESCE_ROWS = 65_536
 
 
-def _no_release() -> None:
-    """Release handle of the round-1 degree checkpoint in the rounds
-    that take none (k-core rounds 2..n)."""
-
-
-def _kcore_oracle() -> str:
-    rounds = []
-    for i in range(1, _KCORE_ROUNDS + 1):
-        rounds.append(f"""
+def _kcore_unroll_sql(rounds: int) -> str:
+    """The peel unrolled ``rounds`` deep in DuckDB, as ``WITH`` CTEs for
+    the oracles to finish with their own ``SELECT``: the edge list
+    ``e0``, its nodes ``v0``, the threshold ``kk`` and, per round i, the
+    degrees ``d{i}``, the kept set ``k{i}`` and the pruned edges
+    ``e{i}``. Every round CTE is ``MATERIALIZED``: each references the
+    previous edge set three times, so an inlined unroll re-expands
+    exponentially in any engine. Past the fixpoint the rounds are the
+    identity, so an unroll deeper than the engine's early exit gives
+    the same counts."""
+    steps = ",".join(
+        f"""
         d{i} AS MATERIALIZED (SELECT node, COUNT(*) AS d FROM (
                      SELECT u AS node FROM e{i-1}
                      UNION ALL SELECT v FROM e{i-1}) GROUP BY node),
         k{i} AS MATERIALIZED (SELECT node FROM d{i}, kk WHERE d >= kk.k),
         e{i} AS MATERIALIZED (SELECT e.u, e.v FROM e{i-1} e
                  JOIN k{i} a ON a.node = e.u
-                 JOIN k{i} b ON b.node = e.v)""")
-    steps = ",".join(rounds)
+                 JOIN k{i} b ON b.node = e.v)"""
+        for i in range(1, rounds + 1)
+    )
     return f"""
         WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
         e0 AS MATERIALIZED (
@@ -864,16 +865,89 @@ def _kcore_oracle() -> str:
                    SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)),
         kk AS MATERIALIZED (SELECT CAST(2 * (SELECT COUNT(*) FROM e0)
                            // (SELECT COUNT(*) FROM v0) AS BIGINT) AS k),
-        {steps}
-        SELECT (SELECT k FROM kk) AS k,
-               CAST((SELECT COUNT(*) FROM k{_KCORE_ROUNDS}) AS BIGINT)
-                   AS n_core_nodes,
-               CAST((SELECT COUNT(*) FROM e{_KCORE_ROUNDS}) AS BIGINT)
-                   AS n_core_edges,
-               CAST((SELECT COUNT(*) FROM k{_KCORE_ROUNDS - 1})
-                    - (SELECT COUNT(*) FROM k{_KCORE_ROUNDS}) AS BIGINT)
-                   AS n_removed_last_round
+        {steps}"""
+
+
+def _kcore_peel(
+    spark: SparkSession, sf_dir: str, max_rounds: int
+) -> tuple[int | None, int, list[tuple[int, int, int]], bool]:
+    """Peel the co-purchase graph with k = floor(2|E|/|V|) for at most
+    ``max_rounds`` rounds; return ``(k, n_nodes, trajectory,
+    converged)``. ``trajectory`` holds ``(round, n_kept, n_edges)`` for
+    every round run; ``converged`` says the last one is the fixpoint.
+    An edgeless graph has no nodes, so ``k`` is None (the oracle's
+    ``x // 0`` is NULL) and round 1 keeps nothing: the fixpoint.
+
+    A round keeps the nodes of degree >= k and the edges between kept
+    nodes. Its plan reads the previous edge set three times (the degree
+    aggregate and both semi-join sides), so an unrolled peel grows
+    ~5^rounds and analysis runs the driver out of memory; each round's
+    edges are therefore checkpointed and become the next round's leaf.
+    The edge list is checkpointed first, so the lineitem self-join runs
+    once. The round-1 degree table is checkpointed too: its row count is
+    |V|, which k needs before the kept set can be filtered. Each round's
+    kept set is checkpointed because it is the small side of both
+    semi-joins and the fixpoint test. Every count is a counter observed
+    on its checkpoint's own job (``local_checkpoint``), so the peel runs
+    no action of its own, and every checkpoint is released once its
+    successor is materialized.
+
+    Exact fixpoint detection: e_i ⊆ e_{i-1} makes every degree
+    non-increasing, so keep_{i+1} ⊆ keep_i. Equal counts of nested
+    finite sets are equal sets, and an unchanged kept set filters the
+    edges to themselves, so the first round whose kept count equals the
+    previous one (round 0 keeps all |V| nodes) is a true fixpoint, and
+    every later round repeats it. At that round e_i = e_{i-1}, so its
+    edge count is the one already observed and no prune is run.
     """
+    from hadoop_map_reduce_spark.checkpoint import local_checkpoint
+
+    def degrees(edges: DataFrame) -> DataFrame:
+        return (
+            edges.select(F.col("u").alias("node"))
+            .unionAll(edges.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+
+    rows = F.count(F.lit(1))
+    e, rel_e, seen = local_checkpoint(_copurchase_edges(spark, sf_dir), n=rows)
+    n_edges = seen["n"]
+    deg, rel_deg, seen = local_checkpoint(degrees(e), n=rows)
+    n_nodes = prev_kept = seen["n"]
+    # Exact integer division, the same `2*e // v` the oracle computes.
+    k = (2 * n_edges) // n_nodes if n_nodes else None
+    par = spark.sparkContext.defaultParallelism
+    trajectory: list[tuple[int, int, int]] = []
+    for i in range(1, max_rounds + 1):
+        keep, rel_keep, seen = local_checkpoint(
+            deg.filter(F.col("d") >= F.lit(k)).select("node"), n=rows
+        )
+        rel_deg()  # round 1's checkpoint; a no-op in later rounds
+        kept = seen["n"]
+        if kept == prev_kept:
+            trajectory.append((i, kept, n_edges))
+            rel_keep()
+            rel_e()
+            return k, n_nodes, trajectory, True
+        kb = F.broadcast(keep) if kept <= _BROADCAST_MAX_ROWS else keep
+        pruned = e.join(
+            kb.select(F.col("node").alias("u")), "u", "left_semi"
+        ).join(kb.select(F.col("node").alias("v")), "v", "left_semi")
+        # |e_i| <= |e_{i-1}|: sizing by the previous count can only
+        # over-provision partitions.
+        p = (n_edges + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
+        if 0 < p < par:
+            pruned = pruned.coalesce(p)
+        new_e, rel_new, seen = local_checkpoint(pruned, n=rows)
+        rel_e()
+        rel_keep()
+        e, rel_e, n_edges = new_e, rel_new, seen["n"]
+        trajectory.append((i, kept, n_edges))
+        prev_kept = kept
+        deg = degrees(e)
+    rel_e()
+    return k, n_nodes, trajectory, False
 
 
 @register(
@@ -890,164 +964,38 @@ def _kcore_oracle() -> str:
         "the final round (0 = converged — partial convergence is "
         "reported, never hidden)."
     ),
-    oracle=_kcore_oracle(),
+    oracle=_kcore_unroll_sql(_KCORE_ROUNDS)
+    + f"""
+        SELECT (SELECT k FROM kk) AS k,
+               CAST((SELECT COUNT(*) FROM k{_KCORE_ROUNDS}) AS BIGINT)
+                   AS n_core_nodes,
+               CAST((SELECT COUNT(*) FROM e{_KCORE_ROUNDS}) AS BIGINT)
+                   AS n_core_edges,
+               CAST((SELECT COUNT(*) FROM k{_KCORE_ROUNDS - 1})
+                    - (SELECT COUNT(*) FROM k{_KCORE_ROUNDS}) AS BIGINT)
+                   AS n_removed_last_round
+    """,
 )
 def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Each peeling round is one degree aggregate plus two semi-joins,
-    all keyed on node ids — the same narrow-integer shuffle shape as
-    graph_cc_bounded. Unlike CC (whose per-round tree references the
-    previous labels ONCE, growing linearly), a peeling round references
-    the previous edge set through the degree aggregate AND both
-    semi-join sides — unrolled naively the logical plan grows ~5^rounds
-    and analysis OOMs the driver. Each round therefore ends in an eager
-    ``localCheckpoint``: the materialized edge list (shrinking, ≤ the
-    initial edge count of 16-byte rows) becomes the next round's leaf,
-    keeping plan size constant — the iterative-refinement twin of the
-    pagerank persist pattern. The threshold is a 1-row broadcast
-    crossed into every round's filter.
-
-    Round-11 (optimization round, guide §2.4/§1.2):
-
-    * ONE edge build per invocation — ``e`` is checkpointed FIRST and
-      the node set / threshold derive from the checkpointed leaf
-      (previously the kk job and the e-checkpoint job each re-ran the
-      lineitem self-join + distinct).
-    * the kept set is checkpointed per round (it is the small side of
-      both semi-joins AND the convergence scalar), so the degree
-      aggregate runs once per round, not once per consumer.
-    * early FIXPOINT exit inside the fixed budget: kept sets shrink
-      monotonically (e_i ⊆ e_{i-1} ⇒ degrees non-increasing ⇒
-      keep_{i+1} ⊆ keep_i), so an unchanged kept-set COUNT is an
-      unchanged SET; an unchanged kept set filters e to itself, making
-      every remaining round the identity — the round-8 census equals
-      the fixpoint census EXACTLY (same rule the graph_kcore_converged
-      oracle re-derives in SQL). Detection reads the kept-set row
-      count observed on the kept set's own checkpoint job (a
-      ``local_checkpoint`` counter): no action of its own, and the
-      edge count of every round rides the edge checkpoint the same way.
-    * the semi-join build side is broadcast explicitly when the
-      just-measured kept count is broadcast-safe (the planner sees an
-      RDD leaf with no stats; the driver KNOWS the row count) — at
-      larger-than-broadcast node sets the plain semi join shape is
-      kept and AQE decides.
-    """
-    from hadoop_map_reduce_spark.checkpoint import local_checkpoint
-
-    # Round-12: every per-round checkpoint is taken through the tracked
-    # local_checkpoint helper and released as soon as its consumer is
-    # materialized (ADVICE r11 #3 — the bare localCheckpoint blocks were
-    # only freed at driver GC, accumulating across bench invocations in
-    # one session); this query fully materializes before returning, so
-    # nothing stays persisted after it.
-    e, rel_e, seen = local_checkpoint(
-        _copurchase_edges(spark, sf_dir), n=F.count(F.lit(1))
-    )
-    n_edges0 = seen["n"]
-    e_cnt = n_edges0  # |e_i|, tracked per round (also the final census)
-    par = spark.sparkContext.defaultParallelism
-    # The threshold k = floor(2|E|/|V|) derives from round 1's degree
-    # table (its row count IS |V|: every node of an edge list has
-    # degree >= 1) — the separate node-distinct and threshold jobs of
-    # the previous shape are gone, and the division is EXACT integer
-    # arithmetic, the same `2*e // v` the DuckDB oracle computes (the
-    # old floor(double) agreed only up to double rounding).
-    k_val: int | None = None
-    n_nodes: int | None = None
-    prev_cnt: int | None = None  # |keep_{i-1}|
-    keep_cnt: int | None = None  # |keep_i|
-    rel_deg = _no_release
-    for _ in range(_KCORE_ROUNDS):
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        if k_val is None:
-            # Round 1 only: k needs |V|, the row count of the degree
-            # table, before the kept set can be filtered — so the
-            # degree table is checkpointed (counting itself) and the
-            # kept set is a 1-job filter of that leaf. Later rounds
-            # checkpoint just the (smaller) kept set.
-            deg, rel_deg, seen = local_checkpoint(deg, n=F.count(F.lit(1)))
-            n_nodes = seen["n"]
-            if not n_nodes:
-                keep_cnt = 0
-                prev_cnt = 0
-                rel_deg()
-                break
-            k_val = (2 * n_edges0) // n_nodes
-        keep, rel_keep, seen = local_checkpoint(
-            deg.filter(F.col("d") >= F.lit(k_val)).select("node"),
-            n=F.count(F.lit(1)),
-        )
-        rel_deg()
-        cnt = seen["n"]
-        if keep_cnt is not None and cnt == keep_cnt:
-            # Fixpoint: this round's kept set equals the previous
-            # round's, so e is already filtered to it and every
-            # remaining round reproduces (keep, e) unchanged —
-            # including round _KCORE_ROUNDS, whose census is therefore
-            # this one with n_removed_last_round = 0.
-            prev_cnt = cnt
-            rel_keep()
-            break
-        prev_cnt, keep_cnt = keep_cnt, cnt
-        kb = F.broadcast(keep) if cnt <= _KCORE_BROADCAST_MAX else keep
-        pruned = e.join(
-            kb.select(F.col("node").alias("u")), "u", "left_semi"
-        ).join(kb.select(F.col("node").alias("v")), "v", "left_semi")
-        # Tail-round coalesce (guide §2.2): |e_i| <= |e_{i-1}| = e_cnt,
-        # so sizing by the previous count can only over-provision; the
-        # guard keeps at-scale rounds (edge count >> cores) untouched.
-        p = (e_cnt + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
-        if 0 < p < par:
-            pruned = pruned.coalesce(p)
-        new_e, rel_new, seen = local_checkpoint(pruned, n=F.count(F.lit(1)))
-        rel_e()
-        rel_keep()
-        e, rel_e = new_e, rel_new
-        e_cnt = seen["n"]
-    n_prev = prev_cnt if prev_cnt is not None else n_nodes
-    rel_e()
+    """The census of round 8, read off the last two rounds of
+    :func:`_kcore_peel`. A peel that reaches its fixpoint earlier stops
+    there: every later round repeats it, so round 8's census is the
+    fixpoint's, with 0 nodes removed."""
+    k, n_nodes, trajectory, _ = _kcore_peel(spark, sf_dir, _KCORE_ROUNDS)
+    _, kept, n_edges = trajectory[-1]
+    prev_kept = trajectory[-2][1] if len(trajectory) > 1 else n_nodes
     return spark.createDataFrame(
-        [(k_val, keep_cnt, e_cnt, n_prev - keep_cnt)],
+        [(k, kept, n_edges, prev_kept - kept)],
         "k long, n_core_nodes long, n_core_edges long, "
         "n_removed_last_round long",
     )
 
 
-# ---------------------------------------------------------------------------
-# graph_kcore_converged (round-11, VERDICT r10 #4): the
-# graph_pagerank_converged discipline applied to k-core peeling — run to
-# the kept-set FIXPOINT, report the full per-round trajectory, raise on
-# non-convergence. Stronger contract than the bounded twin: the oracle
-# pins (round, n_kept, n_edges) for EVERY peeling round up to the
-# detected fixpoint, so an engine that converges at the wrong round or
-# through the wrong intermediate states fails loudly, not just one that
-# lands on the wrong final census.
-# ---------------------------------------------------------------------------
-
-_KCORE_MAX_ROUNDS = 12  # measured fixpoints at 3-4 (sf0.001/0.01); 3x margin
-
-
 def _kcore_converged_oracle() -> str:
-    """Unrolled peeling to the budget depth (identity past the
-    fixpoint, since an unchanged kept set reproduces itself), then the
-    convergence round recovered IN SQL as the smallest round whose
-    kept-count equals its predecessor's — the same detection rule the
-    engine runs, so depth bookkeeping can never silently diverge."""
-    rounds = []
-    for i in range(1, _KCORE_MAX_ROUNDS + 1):
-        rounds.append(f"""
-        d{i} AS MATERIALIZED (SELECT node, COUNT(*) AS d FROM (
-                     SELECT u AS node FROM e{i-1}
-                     UNION ALL SELECT v FROM e{i-1}) GROUP BY node),
-        k{i} AS MATERIALIZED (SELECT node FROM d{i}, kk WHERE d >= kk.k),
-        e{i} AS MATERIALIZED (SELECT e.u, e.v FROM e{i-1} e
-                 JOIN k{i} a ON a.node = e.u
-                 JOIN k{i} b ON b.node = e.v)""")
-    steps = ",".join(rounds)
+    """The unroll to the budget depth, then the convergence round
+    recovered in SQL as the smallest round whose kept count equals its
+    predecessor's — the rule the engine runs, so the two cannot
+    disagree on depth."""
     count_rows = ", ".join(
         ["(0, (SELECT COUNT(*) FROM v0), (SELECT COUNT(*) FROM e0))"]
         + [
@@ -1056,18 +1004,7 @@ def _kcore_converged_oracle() -> str:
             for i in range(1, _KCORE_MAX_ROUNDS + 1)
         ]
     )
-    return f"""
-        WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-        e0 AS MATERIALIZED (
-            SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-            FROM li a JOIN li b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey),
-        v0 AS (SELECT DISTINCT node FROM (
-                   SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)),
-        kk AS MATERIALIZED (SELECT CAST(2 * (SELECT COUNT(*) FROM e0)
-                           // (SELECT COUNT(*) FROM v0) AS BIGINT) AS k),
-        {steps},
+    return _kcore_unroll_sql(_KCORE_MAX_ROUNDS) + f""",
         counts(i, c, ec) AS (VALUES {count_rows}),
         conv AS (SELECT MIN(a.i) AS n_rounds FROM counts a
                  JOIN counts b ON b.i = a.i - 1 AND b.c = a.c)
@@ -1096,101 +1033,25 @@ def _kcore_converged_oracle() -> str:
     oracle=_kcore_converged_oracle(),
 )
 def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VERDICT r10 #4: the convergence discipline of
-    graph_pagerank_converged applied back to the k-core peel — an
-    unconverged peel now raises instead of silently reporting the
-    budget-round state as "the k-core". Per-round plan handling is the
-    bounded twin's (eager localCheckpoint per round keeps the
-    otherwise ~5^rounds logical plan constant-size; threshold rides as
-    a 1-row broadcast); the per-round kept/edge counts the detection
-    already needs ARE the result rows, assembled driver-side (≤ budget
-    rows — bounded metadata, the sanctioned collect class). At 100 TB:
-    round count is degree-distribution-bounded (measured 3-4 here),
-    each round shuffles narrow integer pairs only, and detection adds
-    no action: the kept and edge counts are counters observed on the
-    round's own checkpoint jobs (``local_checkpoint``) — the same
-    scalars the peel's own progress logging would read.
-
-    Monotonicity argument for exact detection: e_i ⊆ e_{i-1} ⇒ every
-    degree is non-increasing ⇒ keep_{i+1} ⊆ keep_i; equal COUNTS of
-    nested finite sets force equal sets, and an unchanged kept set
-    filters e to itself — a true fixpoint, not an oscillation.
-    """
-    # Round-11 (optimization round): same single-edge-build +
-    # checkpointed-keep restructure as graph_kcore_bounded — e is
-    # checkpointed FIRST (nodes/threshold derive from the leaf, so the
-    # lineitem self-join runs once, not three times), the kept set is
-    # checkpointed and counted by its own checkpoint job (a separate
-    # keep.count() would re-run the degree aggregate), and the
-    # semi-join build side is broadcast while the just-measured kept
-    # count is broadcast-safe. Trajectory values are unchanged: at the
-    # fixpoint round e_i == e_{i-1}, so the recorded edge count is the
-    # previous round's materialized count — no extra prune needed.
-    from hadoop_map_reduce_spark.checkpoint import local_checkpoint
-
-    # Round-12: tracked checkpoints with per-round release + tail-round
-    # coalesce, exactly as graph_kcore_bounded (the trajectory values
-    # are untouched — release/coalesce only manage block storage and
-    # task counts of already-materialized leaves).
-    e, rel_e, seen = local_checkpoint(
-        _copurchase_edges(spark, sf_dir), n=F.count(F.lit(1))
+    """The trajectory of :func:`_kcore_peel` up to its fixpoint, one row
+    per round (at most ``_KCORE_MAX_ROUNDS`` rows, assembled on the
+    driver). A peel that has not converged by then raises instead of
+    reporting the budget round's state as the k-core. The oracle pins
+    every round, so a peel that converges at the wrong round or through
+    the wrong intermediate sets fails, not only one with the wrong
+    final census."""
+    k, _, trajectory, converged = _kcore_peel(
+        spark, sf_dir, _KCORE_MAX_ROUNDS
     )
-    e_cnt = seen["n"]
-    par = spark.sparkContext.defaultParallelism
-    # Threshold from round 1's degree table, exact integer division —
-    # see graph_kcore_bounded (same round-11 restructure, same
-    # self-counting degree checkpoint in round 1).
-    k_val: int | None = None
-    prev_kept: int | None = None
-    trajectory: list[tuple[int, int, int]] = []
-    rel_deg = _no_release
-    for i in range(1, _KCORE_MAX_ROUNDS + 1):
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
+    if not converged:
+        raise RuntimeError(
+            f"graph_kcore_converged did not reach its kept-set fixpoint "
+            f"in {_KCORE_MAX_ROUNDS} rounds; raise _KCORE_MAX_ROUNDS "
+            f"(oracle unroll depth must match)"
         )
-        if k_val is None:
-            deg, rel_deg, seen = local_checkpoint(deg, n=F.count(F.lit(1)))
-            prev_kept = seen["n"]  # |V|: round 0 keeps every node
-            k_val = (2 * e_cnt) // prev_kept
-        keep, rel_keep, seen = local_checkpoint(
-            deg.filter(F.col("d") >= F.lit(k_val)).select("node"),
-            n=F.count(F.lit(1)),
-        )
-        rel_deg()
-        kept = seen["n"]
-        if kept == prev_kept:
-            # Fixpoint: the kept set equals last round's, e is already
-            # filtered to it (e_i == e_{i-1}), so this round's edge
-            # count is the count already materialized.
-            trajectory.append((i, kept, e_cnt))
-            rel_keep()
-            rel_e()
-            return spark.createDataFrame(
-                [(k_val, r, n, m) for r, n, m in trajectory],
-                "k long, round long, n_kept long, n_edges long",
-            )
-        kb = F.broadcast(keep) if kept <= _KCORE_BROADCAST_MAX else keep
-        pruned = e.join(
-            kb.select(F.col("node").alias("u")), "u", "left_semi"
-        ).join(kb.select(F.col("node").alias("v")), "v", "left_semi")
-        p = (e_cnt + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
-        if 0 < p < par:
-            pruned = pruned.coalesce(p)
-        new_e, rel_new, seen = local_checkpoint(pruned, n=F.count(F.lit(1)))
-        rel_e()
-        rel_keep()
-        e, rel_e = new_e, rel_new
-        e_cnt = seen["n"]
-        trajectory.append((i, kept, e_cnt))
-        prev_kept = kept
-    rel_e()
-    raise RuntimeError(
-        f"graph_kcore_converged did not reach its kept-set fixpoint in "
-        f"{_KCORE_MAX_ROUNDS} rounds; raise _KCORE_MAX_ROUNDS (oracle "
-        f"unroll depth must match)"
+    return spark.createDataFrame(
+        [(k, r, n, m) for r, n, m in trajectory],
+        "k long, round long, n_kept long, n_edges long",
     )
 
 
@@ -1288,10 +1149,8 @@ def graph_cc_loground(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PageRank to convergence (round-10, VERDICT r9 #5): the convergence +
-# eager-checkpoint discipline connected_components_loground proved,
-# applied back to PageRank — in EXACT integer arithmetic so the
-# fixpoint itself is cross-engine hash-pinnable.
+# PageRank to convergence, in exact integer arithmetic so the fixpoint
+# itself is cross-engine hash-pinnable
 # ---------------------------------------------------------------------------
 #
 # Exactness design: floating-point PageRank never reaches a bit-stable
@@ -1343,21 +1202,8 @@ def _pagerank_converged_oracle() -> str:
         JOIN deg d ON e.src = d.src
         GROUP BY e.dst
     )""")
-    graph_materialized = f"""
-    e0 AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey + {_SUPP_OFFSET} AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    edges AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM e0
-        UNION ALL
-        SELECT s AS src, c AS dst FROM e0
-    ),
-    deg AS MATERIALIZED (
-        SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
-    )"""
     return f"""
-    WITH {graph_materialized},
+    WITH {_graph_sql(materialized=True)},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
     nb AS MATERIALIZED (
@@ -1385,49 +1231,32 @@ def _pagerank_converged_oracle() -> str:
     oracle=_pagerank_converged_oracle(),
 )
 def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graph_cc_loground discipline applied to PageRank (VERDICT r9
-    #5): per-round eager localCheckpoint keeps the plan constant-size
-    (a 77-round lazy chain would otherwise be a 77-deep join tree at
-    analysis time), the previous round's blocks are released once the
+    """Each round's ranks are checkpointed, which keeps the plan
+    constant-size (a 77-round lazy chain would be a 77-deep join tree at
+    analysis time); the previous round's blocks are released once the
     next is materialized, and convergence is read from SUM(r), a
     counter observed on each round's own checkpoint job
-    (``local_checkpoint``) — no aggregate action per round. At 100 TB: edges pre-partition on src once (the
-    checkpoint cache preserves the layout); ranks (n_nodes rows) are
-    the only per-round shuffle; round count is data-bounded at
+    (``local_checkpoint``), so no round runs an aggregate action. The
+    rank vector is broadcast as in :func:`graph_pagerank`; integer
+    arithmetic makes the result order-independent, so the join strategy
+    cannot move a bit. The round count is bounded by the data at
     ~log(SCALE)/log(1/damping), independent of graph size.
     """
     from hadoop_map_reduce_spark.checkpoint import local_checkpoint
 
-    from pyspark.sql import Window
-
-    edges = _edges(spark, sf_dir)
-    # Same single-exchange outdeg window as graph_pagerank (round-11).
-    ew, release_ew, _ = local_checkpoint(
-        edges.withColumn(
-            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        )
-    )
+    ew, nodes, n, release_ew = _rank_inputs(spark, sf_dir)
     try:
-        nodes = ew.select(F.col("src").alias("node")).distinct()
-        n = nodes.count()
         base15 = (15 * (_PR_SCALE // n)) // 100
         ranks = nodes.select("node", F.lit(0).cast("long").alias("r"))
-        # Round-12: same runtime-count-gated rank broadcast as
-        # graph_pagerank — here the win multiplies across the 77-83
-        # rounds (each previously sorted/shuffled the checkpointed edge
-        # stream into a sort-merge join). Integer arithmetic makes the
-        # result order-independent, so the join strategy cannot move a
-        # single bit.
-        small = n <= _RANKS_BROADCAST_MAX
+        small = n <= _BROADCAST_MAX_ROWS
         prev_sum = 0
         release = None
-        # One round PAST the unroll budget: detecting a fixpoint first
-        # produced at round K needs round K+1 (which recomputes the
-        # same state). Returning at round _PR_MAX_ROUNDS + 1 therefore
-        # still returns r_{_PR_MAX_ROUNDS} — exactly the oracle's
-        # deepest CTE — while a fixpoint NOT yet reached by the budget
-        # raises below (r10 review: without the +1, a graph converging
-        # exactly at round 100 raised spuriously).
+        # One round past the unroll budget: detecting a fixpoint first
+        # produced at round K needs round K+1, which recomputes the same
+        # state. Returning at round _PR_MAX_ROUNDS + 1 therefore still
+        # returns r_{_PR_MAX_ROUNDS}, the oracle's deepest CTE, while a
+        # fixpoint not reached by the budget raises below; without the
+        # +1 a graph converging exactly at round 100 would raise.
         for _rounds in range(1, _PR_MAX_ROUNDS + 2):
             rhs = F.broadcast(ranks) if small else ranks
             nxt = (

@@ -75,3 +75,35 @@ def test_kcore_matches_pure_python_peel(spark, sf_dir):
     assert sorted(tuple(row) for row in converged) == [
         (k, i, len(kept[i]), len(edges[i])) for i in range(1, fix + 1)
     ]
+
+
+# Crafted lineitem tables, (l_orderkey, l_partkey) rows. "edgeless": no
+# order holds two distinct parts, so the co-purchase graph has no edge
+# and no node. "clique4": one order over parts 1-4, a 4-clique with
+# k = 2*6 // 4 = 3 in which round 1 keeps every node, so the fixpoint is
+# found against round 0's |V|.
+_KCORE_FIXTURES = {
+    "edgeless": [(1, 1), (2, 2), (3, 3), (4, 4), (5, 7), (5, 7)],
+    "clique4": [(1, 1), (1, 2), (1, 3), (1, 4)],
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(_KCORE_FIXTURES))
+@pytest.mark.parametrize(
+    "name", ["graph_kcore_bounded", "graph_kcore_converged"]
+)
+def test_kcore_crafted_graph_matches_oracle(spark, tmp_path, name, fixture):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    orderkeys, partkeys = zip(*_KCORE_FIXTURES[fixture])
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array(orderkeys, pa.int64()),
+                "l_partkey": pa.array(partkeys, pa.int64()),
+            }
+        ),
+        tmp_path / "lineitem.parquet",
+    )
+    compare_query(spark, str(tmp_path), name)

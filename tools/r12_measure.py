@@ -1,9 +1,9 @@
-"""Round-12 measurement harness (guide §1): per-query timing into the
-noop sink plus ``explain("formatted")`` capture for the optimization
-round's before/after evidence. Same methodology as tools/r11_measure.py
-(warmup + median of 3, noop sink, $SPARK_GRAFT_SF_DIR input, page-cache
-prewarm) so numbers are comparable with bench.py; runs only the
-requested subset so one query can be isolated while iterating.
+"""Per-query measurement harness: timing into the noop sink plus
+``explain("formatted")`` capture for before/after evidence. Same
+methodology as bench.py (warmup + median of 3, noop sink,
+$SPARK_GRAFT_SF_DIR input, page-cache prewarm) so numbers are
+comparable with it; runs only the requested subset so one query can be
+isolated while iterating.
 
 Usage:
     python tools/r12_measure.py plans [query ...]   # plans/r12/<q>_<tag>.txt

@@ -4,7 +4,9 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet tables (default
 sf0.01), comparing row counts, column names, and order-insensitive
 values. Usage: ``python tools/verify_contract.py [--bare] [--only q1,q2]
-[sf_dir]``; ``--only`` checks just the named queries.
+[sf_dir]``; ``--only`` checks just the named queries. Exits 1 when any
+query fails or errors (the last line then lists them instead of
+``FAILS: none``), so it can gate a script or CI step.
 """
 import sys
 from pathlib import Path
@@ -79,3 +81,4 @@ for name, fn in qs.items():
         print(f"ERR {name}: {type(ex).__name__} {str(ex).splitlines()[0][:100]}")
 print("FAILS:", fails if fails else "none", f"({len(qs)} queries)")
 spark.stop()
+sys.exit(1 if fails else 0)

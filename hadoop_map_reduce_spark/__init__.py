@@ -35,7 +35,6 @@ def __getattr__(name):
         "cosine_topk": "hadoop_map_reduce_spark.operators.similarity",
         "ann_topk_lsh": "hadoop_map_reduce_spark.operators.similarity",
         "cosine_neardup_pairs": "hadoop_map_reduce_spark.operators.similarity",
-        "cosine_neardup_blas": "hadoop_map_reduce_spark.operators.similarity",
         "salted_join": "hadoop_map_reduce_spark.operators.skew",
         "two_phase_agg": "hadoop_map_reduce_spark.operators.skew",
         "read_text_lines": "hadoop_map_reduce_spark.sources",

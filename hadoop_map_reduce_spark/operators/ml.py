@@ -4,8 +4,8 @@ The reference engine has no ML surface; this extends the engine the same
 way the dedup/similarity operators do — an iterative algorithm expressed
 as repeated declarative passes, the pattern a 100-TB training-data
 pipeline needs for corpus clustering (topic balancing, dedup-cluster
-seeding, IVF coarse quantizers; `operators/similarity.py:241` uses the
-one-shot variant of the same assignment step).
+seeding, IVF coarse quantizers; ``similarity._assign_cells_blas`` uses
+the one-shot variant of the same assignment step).
 
 Determinism discipline (what makes the result testable and reproducible
 across partitionings, the same rule as ``plans.relational_queries.
@@ -69,7 +69,8 @@ def assign_clusters_blas(
     batch. Same per-row independence (no shuffle); float reduction order
     differs from the fold, so assignments can differ only on exact
     distance ties — parity is test-pinned (``tests/test_ml_queries.py``).
-    Mirrors the fold/BLAS twin pattern of ``operators/similarity.py``.
+    Mirrors the fold reference / grid-BLAS pair of
+    ``operators/similarity.py``.
     """
     import numpy as np
 

@@ -45,6 +45,7 @@ from hadoop_map_reduce_spark.functions.vectors import (
     lit_doubles,
 )
 from hadoop_map_reduce_spark.operators.ml import kmeans_lloyd
+from hadoop_map_reduce_spark.operators.similarity import top_k_by_sim
 
 CODE_BITS = 4  # ksub <= 16 packs one code per nibble
 
@@ -286,6 +287,37 @@ def _adc_sum_sql(
     return " + ".join(terms)
 
 
+def _rerank_shortlist(
+    scored: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    refine: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ADC searches' shared tail: keep each query's top ``k * refine``
+    rows of ``(_qid, _qvec, neighbor_id, _approx)`` by approximate score
+    (ties to the lower neighbor id; a per-query WindowGroupLimit, never a
+    single-partition sort), join only those back to their float corpus
+    vectors, and rank them by EXACT round-6 cosine with
+    ``similarity.top_k_by_sim``."""
+    w = Window.partitionBy("_qid").orderBy(
+        F.col("_approx").desc(), F.col("neighbor_id").asc()
+    )
+    cands = scored.withColumn("_rk", F.row_number().over(w)).filter(
+        F.col("_rk") <= k * refine
+    )
+    cvecs = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("_cvec"),
+    )
+    sim = F.round(cosine_similarity(F.col("_qvec"), F.col("_cvec")), 6)
+    exact = cands.join(cvecs, "neighbor_id").select(
+        F.col("_qid").alias("query_id"), "neighbor_id", sim.alias("sim")
+    )
+    return top_k_by_sim(exact, k)
+
+
 def pq_topk_adc(
     corpus_codes: DataFrame,
     corpus: DataFrame,
@@ -353,29 +385,7 @@ def pq_topk_adc(
             approx.alias("_approx"),
         )
     )
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id").asc()
-    )
-    cands = scored.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= k * refine
-    )
-
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cvec"),
-    )
-    sim = F.round(cosine_similarity(F.col("_qvec"), F.col("_cvec")), 6)
-    exact = cands.join(cvecs, "neighbor_id").select(
-        F.col("_qid").alias("query_id"),
-        "neighbor_id",
-        sim.alias("sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn(
-        "rank", F.row_number().over(w2).cast("long")
-    ).filter(F.col("rank") <= k)
+    return _rerank_shortlist(scored, corpus, k, refine, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -643,23 +653,4 @@ def ivfpq_topk_adc(
     )
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("_qid"))
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id").asc()
-    )
-    cands = scored.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= k * refine
-    )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cvec"),
-    )
-    sim = F.round(cosine_similarity(F.col("_qvec"), F.col("_cvec")), 6)
-    exact = cands.join(cvecs, "neighbor_id").select(
-        F.col("_qid").alias("query_id"), "neighbor_id", sim.alias("sim")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn(
-        "rank", F.row_number().over(w2).cast("long")
-    ).filter(F.col("rank") <= k)
+    return _rerank_shortlist(scored, corpus, k, refine, id_col, vec_col)

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers:
+Two tiers of top-k search:
 
 - brute-force cosine top-k: exact; broadcast the (small) query set against
   the full corpus, per-query heap via window row_number. The baseline and
@@ -10,6 +10,11 @@ Two tiers:
   bucket key; exact cosine re-ranks within buckets. Probing multiple
   buckets (multi-probe) trades recall for cost without re-shuffling the
   corpus — the bucketed corpus table is reusable across query batches.
+
+Every top-k search here and in ``operators/pq.py`` ends in one ranking
+tail, :func:`top_k_by_sim`. Exact all-pairs cosine has one reference,
+:func:`cosine_neardup_pairs` (the θ-join), and one distributed path,
+:func:`cosine_neardup_grid_blas`.
 
 Vector math is pure Column expressions (zip_with/aggregate): stays in the
 JVM, no Arrow round-trips in the hot path.
@@ -29,6 +34,21 @@ from hadoop_map_reduce_spark.functions.vectors import (
     lit_doubles,
     lit_longs,
 )
+
+
+def top_k_by_sim(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best rows of ``(query_id, neighbor_id, sim)``
+    with a LONG ``rank`` column: ``row_number`` over sim descending, ties
+    to the lower neighbor id, so the ranking is total and deterministic
+    (sims arrive rounded to 6 dp, so it is stable across engines). The
+    ``rank <= k`` filter plans as a WindowGroupLimit."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def cosine_topk(
@@ -61,13 +81,7 @@ def cosine_topk(
             sim.alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k_by_sim(scored, k)
 
 
 def rp_sign_matrix(dim: int, out_dims: int) -> list[list[int]]:
@@ -137,84 +151,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
         norm = math.sqrt(sum(x * x for x in v)) or 1.0
         planes.append([x / norm for x in v])
     return planes
-
-
-#: Hard cap on rows ``cosine_neardup_blas`` will materialize on the
-#: driver (~1M x 256 float64 ≈ 2 GB broadcast).
-BLAS_BROADCAST_MAX_ROWS = 1_000_000
-
-
-def cosine_neardup_blas(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_rows: int = BLAS_BROADCAST_MAX_ROWS,
-) -> DataFrame:
-    """All near-dup pairs via Arrow-batched numpy matmul: each executor
-    block multiplies against a broadcast normalized corpus matrix.
-
-    The vectorized twin of :func:`cosine_neardup_pairs`: ~BLAS throughput
-    instead of per-pair expression folds, at the cost of float summation
-    order (results agree with the exact operator to ~1e-12, not
-    bit-exactly — hence no SQL oracle; parity is test-pinned). The corpus
-    matrix must fit in a broadcast (fine to ~1M x 256 float64); the
-    ceiling is ENFORCED — a cheap count precedes the ``toPandas`` and an
-    oversized corpus raises, directing callers to
-    :func:`cosine_neardup_grid_blas` (exact, distributed) or
-    :func:`lsh_bucket` blocking instead of silently OOM-ing the driver.
-    """
-    import numpy as np
-
-    spark = df.sparkSession
-    # Null vectors never match in the exact operator (null sim filtered),
-    # so dropping them up front preserves parity and keeps matmul clean.
-    clean = df.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
-    n = clean.count()
-    if n > max_rows:
-        raise ValueError(
-            f"cosine_neardup_blas: corpus has {n} rows, over the "
-            f"driver-materialization ceiling of {max_rows}; use "
-            "cosine_neardup_grid_blas (distributed exact) or lsh_bucket "
-            "blocking instead."
-        )
-    # Arrow columnar transfer (toPandas), not collect() of boxed Rows —
-    # at the documented ceiling (~1M x 256 f64) collect would build tens
-    # of GB of Python objects before the matrix copy.
-    corpus_pdf = clean.toPandas()
-    if len(corpus_pdf) == 0:
-        return spark.createDataFrame([], "id_a long, id_b long, sim double")
-    ids = corpus_pdf[id_col].to_numpy(dtype=np.int64)
-    mat = np.array(list(corpus_pdf[vec_col]), dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = np.inf  # zero vectors never match (null-sim parity)
-    normalized = mat / norms[:, None]
-    bc = spark.sparkContext.broadcast((ids, normalized))
-
-    def blocks(it):
-        import pandas as pd
-
-        corpus_ids, corpus = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            block_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            block = np.array(list(pdf[vec_col]), dtype=np.float64)
-            bn = np.linalg.norm(block, axis=1)
-            bn[bn == 0] = np.inf
-            sims = (block / bn[:, None]) @ corpus.T
-            bi, ci = np.where(sims >= threshold)
-            keep = block_ids[bi] < corpus_ids[ci]
-            yield pd.DataFrame(
-                {
-                    "id_a": block_ids[bi][keep],
-                    "id_b": corpus_ids[ci][keep],
-                    "sim": np.round(sims[bi, ci][keep], 6),
-                }
-            )
-
-    schema = "id_a long, id_b long, sim double"
-    return clean.mapInPandas(blocks, schema)
 
 
 def lsh_bucket(
@@ -306,13 +242,7 @@ def ann_topk_lsh(
         .select(F.col("_qid").alias("query_id"), "neighbor_id", sim.alias("sim"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k_by_sim(scored, k)
 
 
 def _assign_cells_blas(
@@ -526,13 +456,7 @@ def ivf_topk_filtered(
     scored = scored.select(
         F.col("_qid").alias("query_id"), "neighbor_id", sim.alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k_by_sim(scored, k)
 
 
 def ivf_cell_census(
@@ -665,11 +589,13 @@ def cosine_neardup_pairs(
 ) -> DataFrame:
     """All unordered pairs with cosine >= threshold (exact, quadratic).
 
-    The oracle-checkable reference semantics; at scale, run after
-    :func:`lsh_bucket` blocking (join on bucket) instead of the raw
-    self-join. Per-vector self-dots are precomputed, so each pair costs
-    ONE fold (the cross dot) — numerically identical to the inline
-    formula (same per-element fold order), just not recomputed.
+    The oracle-checkable reference semantics. The ``id_a < id_b``
+    θ-join plans as a BroadcastNestedLoopJoin, so at scale run
+    :func:`cosine_neardup_grid_blas` (same pairs, distributed) or
+    :func:`lsh_bucket` blocking instead. Per-vector self-dots are
+    precomputed, so each pair costs ONE fold (the cross dot) —
+    numerically identical to the inline formula (same per-element fold
+    order), just not recomputed.
     """
     a = _with_self_dot(df, "id_a", "_va", "_na2", id_col, vec_col)
     b = _with_self_dot(df, "id_b", "_vb", "_nb2", id_col, vec_col)
@@ -691,63 +617,6 @@ def _pair_sim():
         lambda acc, x: acc + x,
     )
     return F.round(F.when(denom != 0.0, dot / denom), 6)
-
-
-def cosine_neardup_blocked(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_blocks: int = 16,
-) -> DataFrame:
-    """Exact all-pairs cosine >= threshold as a block-grid EQUI-join.
-
-    Same answer as :func:`cosine_neardup_pairs` (identical fold shapes, so
-    bit-exact), different physical plan. The naive ``id_a < id_b`` θ-join
-    plans as BroadcastNestedLoopJoin — one whole side broadcast, compute
-    skewed onto however many partitions the other side has. Here each
-    vector hashes to one of B blocks, a tiny broadcast task list enumerates
-    the B·(B+1)/2 unordered block pairs, and both replicated sides meet in
-    a composite-key equi-join on (block_a, block_b): shuffle-partitioned
-    work units of ~(n/B)² pairs each, B-fold replication instead of a
-    full-table broadcast, AQE-splittable, no nested loop.
-
-    Exact all-pairs at a low threshold is inherently Θ(n²) *compute* —
-    measured on this corpus the similarity distribution is a continuum
-    through any threshold (pairs at 0.4000x), so no LSH banding can block
-    it with guaranteed recall. This operator distributes that compute
-    evenly; for genuinely large corpora use :func:`lsh_bucket` /
-    :func:`ann_topk_lsh` (approximate, high-threshold regimes) or the
-    :func:`cosine_neardup_blas` throughput twin.
-    """
-    spark = df.sparkSession
-    tasks = spark.createDataFrame(
-        [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)],
-        "_ba int, _bb int",
-    )
-    # Hash the id into its block (rather than pmod on the raw id): works
-    # for any id type, and id allocation patterns (strides, parity)
-    # cannot collapse the corpus into few blocks and re-skew the grid.
-    blk = lambda c: F.pmod(F.xxhash64(c), F.lit(num_blocks)).cast("int")  # noqa: E731
-    a = _with_self_dot(df, "id_a", "_va", "_na2", id_col, vec_col).withColumn(
-        "_blk_a", blk(F.col("id_a"))
-    )
-    b = _with_self_dot(df, "id_b", "_vb", "_nb2", id_col, vec_col).withColumn(
-        "_blk_b", blk(F.col("id_b"))
-    )
-    exp_a = a.join(F.broadcast(tasks), F.col("_blk_a") == F.col("_ba"))
-    exp_b = b.join(F.broadcast(tasks), F.col("_blk_b") == F.col("_bb"))
-    pairs = exp_a.join(exp_b, ["_ba", "_bb"]).filter(
-        (F.col("_ba") != F.col("_bb")) | (F.col("id_a") < F.col("id_b"))
-    )
-    return (
-        pairs.select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            _pair_sim().alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-    )
 
 
 #: Target mean cluster size when ``semantic_dedup_pairs`` auto-derives k.
@@ -784,8 +653,8 @@ def semantic_dedup_pairs(
     relative to the n_iter k-means passes that follow, and deterministic,
     so the output remains a pure function of the input. Cross-cluster
     near-dups at the decision boundary are the (documented) recall loss
-    that makes this approximate; the exact operators
-    (:func:`cosine_neardup_blocked` / grid BLAS) remain the verify path.
+    that makes this approximate; the exact
+    :func:`cosine_neardup_grid_blas` remains the verify path.
 
     Plan shape: the per-iteration k-means passes are pure Column distance
     folds (no shuffle beyond the (cluster, dim) centroid agg); the pair
@@ -826,26 +695,42 @@ def cosine_neardup_grid_blas(
     num_blocks: int = 8,
     row_chunk: int = 2048,
 ) -> DataFrame:
-    """Exact all-pairs cosine >= threshold: the block-grid distribution of
-    :func:`cosine_neardup_blocked` with BLAS matmul inside each grid cell.
+    """Exact all-pairs cosine >= threshold on a block grid, with BLAS
+    matmul inside each grid cell: the production path for what
+    :func:`cosine_neardup_pairs` defines.
 
-    Same logical plan as the blocked operator — replicate both sides into
-    the B·(B+1)/2 unordered block-pair cells, meet in an equi-join-shaped
-    cogroup on (block_a, block_b) — but each cell computes its ~(n/B)²
+    Each vector hashes to one of B blocks (``xxhash64`` of the id, so id
+    strides or parity cannot collapse the corpus into few blocks); both
+    sides replicate into the B·(B+1)/2 unordered block-pair cells and
+    meet in a cogroup on (block_a, block_b). That gives shuffle-partitioned
+    work units of ~(n/B)² pairs each and B-fold replication instead of
+    the reference θ-join's BroadcastNestedLoopJoin. Each cell computes its
     sims as one numpy matmul over Arrow-transferred batches instead of
     per-pair Catalyst expression folds (measured ~8× on the 2k-vector
-    corpus; the gap widens with pair count). dot/denom evaluation order
-    mirrors the fold shape, and the margin from any round-6 boundary
-    (≥1e-12 on this corpus, vs ~1e-16 summation-order noise) means the
-    rounded sims are bit-identical to the fold's — parity is test-pinned
-    against :func:`cosine_neardup_blocked`.
+    corpus; the gap widens with pair count). Null vectors are dropped,
+    and zero vectors never pair at a positive threshold, as in the
+    reference, where their sim is NULL.
+
+    Exactness: dot/denom evaluation mirrors the reference fold, so only
+    the summation order differs. For integer-valued vectors every dot
+    product and squared norm is an exact float64 integer in any order
+    (below 2**53), so the unrounded sims are the same doubles as the
+    fold's. For float vectors the sims agree when no pair lies within
+    summation-order noise (~1e-16) of a round-6 boundary: the margin is
+    ≥1e-12 on the embeddings corpus, and parity with the reference is
+    test-pinned there and on crafted vectors. The round-6 step itself is
+    numpy's (half-to-even on ``sim * 1e6``), not SQL ROUND's half-up, so
+    a sim whose decimal form ends in a 5 at the 7th place would round
+    differently; no pair on the corpora here lands on such a tie.
 
     At 100 TB: pick B so a block (~n/B vectors) fits an executor's Arrow
     batch; each cell is an independent work unit of bounded memory
     (``row_chunk`` bounds the per-matmul slab), the shuffle moves each
     vector B times (vs a full-table broadcast), and AQE can split hot
-    cells. Exact quadratic compute is inherent at a low threshold; this
-    distributes it at BLAS throughput.
+    cells. Exact all-pairs at a low threshold is Θ(n²) compute — the
+    similarity distribution is a continuum through any threshold, so no
+    LSH banding blocks it with guaranteed recall; this distributes that
+    compute at BLAS throughput.
     """
     import numpy as np
     import pandas as pd
@@ -968,9 +853,4 @@ def prefix_rerank_topk(
     scored = cand.join(F.broadcast(qfull), "query_id").select(
         "query_id", "neighbor_id", sim.alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
+    return top_k_by_sim(scored, k)

@@ -171,10 +171,10 @@ def skyline_grid(
 
     The broadcast matrix is collected on the driver first, so the
     candidate count is ENFORCED against ``max_candidate_rows`` (count +
-    raise, the ``cosine_neardup_blas`` ceiling precedent at
-    operators/similarity.py) — beyond it, a frontier that large should
-    flow into a grid-cogroup all-pairs stage (``embedding_neardup``'s
-    block-grid pattern) rather than a broadcast.
+    raise BEFORE the collect, so an oversized frontier fails with a
+    named error instead of exhausting driver memory) — beyond it, a
+    frontier that large should flow into a grid-cogroup all-pairs stage
+    (``embedding_neardup``'s block-grid pattern) rather than a broadcast.
     """
     if not dims:
         raise ValueError("skyline needs at least one dimension")

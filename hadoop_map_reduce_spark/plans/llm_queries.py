@@ -204,7 +204,7 @@ def similarity_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cartesian; quadratic compute is inherent at this threshold — "
         "sims are a continuum through 0.4 — but distributed in (n/B)^2 "
         "work units at matmul throughput; round-6 parity with the "
-        "Catalyst-fold twin is test-pinned)."
+        "θ-join reference cosine_neardup_pairs is test-pinned)."
     ),
     oracle=f"""
         WITH e AS (

@@ -696,9 +696,9 @@ def events_locf_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "llm", "similarity"),
     description=(
         "Behavioral similarity: 24-dim hour-of-day activity profile per "
-        "user, then exact cosine pairs >= 0.85 via the block-grid "
-        "equi-join — feature derivation composed with the blocked "
-        "near-dup operator."
+        "user, then exact cosine pairs >= 0.85 — feature derivation "
+        "composed with the grid-BLAS near-dup operator (integer counts, "
+        "so every dot product and norm is exact in any summation order)."
     ),
     oracle="""
         WITH p AS (
@@ -726,15 +726,16 @@ def events_locf_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profile assembly is one partial-agg'd shuffle on (user, hour) +
-    one on user; the pair stage reuses cosine_neardup_blocked's
-    block-grid (hash-block equi-join, no nested loop, AQE-splittable) —
-    NOT a join on the 24 hour keys, which would funnel the whole corpus
-    through 24 hot partitions at scale. Counts are integers, so the
-    double dot/norm folds are exact on both engines regardless of
-    accumulation order — the oracle's sparse integer formulation meets
-    the engine's dense fold bit-for-bit."""
+    one on user; the pair stage is cosine_neardup_grid_blas (hash-block
+    grid cells, one BLAS matmul per cell, no nested loop) — NOT a join
+    on the 24 hour keys, which would funnel the whole corpus through 24
+    hot partitions at scale. Counts are integers, so every dot product
+    and squared norm is an exact double in any summation order: the
+    oracle's sparse integer formulation meets the engine's dense matmul
+    bit-for-bit (up to the round-6 tie cosine_neardup_grid_blas
+    documents)."""
     from hadoop_map_reduce_spark.operators.similarity import (
-        cosine_neardup_blocked,
+        cosine_neardup_grid_blas,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -754,7 +755,7 @@ def similarity_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("double"),
         ).alias("profile"),
     )
-    return cosine_neardup_blocked(
+    return cosine_neardup_grid_blas(
         profiles, threshold=0.85, id_col="user_id", vec_col="profile"
     )
 

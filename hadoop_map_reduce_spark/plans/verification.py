@@ -42,6 +42,8 @@ from .registry import REGISTRY
 # pipeline_training_manifest, stream_neardup_lsh: one-expr banding +
 # cached signature UDF — plan-identical by construction, re-fronted
 # out of caution), and search_hybrid_rrf (fused rank recovery).
+# Also removed: similarity_user_profiles, whose pair stage moved from
+# the block-grid Catalyst fold to cosine_neardup_grid_blas.
 DRIVER_VERIFIED: frozenset[str] = frozenset(
     {
         "agg_bit_ops",
@@ -252,7 +254,6 @@ DRIVER_VERIFIED: frozenset[str] = frozenset(
         "set_union",
         "set_union_all_counts",
         "similarity_topk",
-        "similarity_user_profiles",
         "sketch_cms_heavy_hitters",
         "sketch_freq_items",
         "sketch_hll_rollup",

@@ -40,6 +40,7 @@ import gzip
 import io
 import json
 import os
+import sys
 import uuid
 from collections.abc import Iterable, Iterator, Sequence
 
@@ -514,7 +515,20 @@ class WarcStreamReader(DataSourceStreamReader):
 
 def register_warc_datasource(spark) -> None:
     """Register the source and enable Python-source filter pushdown
-    (same runtime-settable conf gate as the zip source)."""
+    (same runtime-settable conf gate as the zip source).
+
+    This module and ``zip_datasource`` (which supplies
+    ``_accepted_values``) are pickled BY VALUE: Spark's streaming-source
+    runner unpickles the source in a Python worker that does not see
+    the package zip ``session.ensure_worker_imports`` ships, so a
+    by-reference pickle fails with ``ModuleNotFoundError`` whenever the
+    driver runs outside the directory that holds the package."""
+    from pyspark import cloudpickle
+
+    from hadoop_map_reduce_spark.sources import zip_datasource
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(zip_datasource)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(WarcDataSource)
 

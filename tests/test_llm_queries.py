@@ -256,39 +256,6 @@ def test_random_projection_preserves_distances(spark, sf_dir):
     assert corr >= 0.25, f"JL distance correlation collapsed: {corr}"
 
 
-def test_blas_neardup_matches_exact(spark, sf_dir):
-    """The vectorized (numpy matmul) near-dup path finds the same pair
-    set as the exact fold-based operator, with sims within float noise."""
-    from hadoop_map_reduce_spark.operators.similarity import (
-        cosine_neardup_blas,
-        cosine_neardup_pairs,
-    )
-    from hadoop_map_reduce_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = {(r.id_a, r.id_b): r.sim for r in cosine_neardup_pairs(emb, 0.4).collect()}
-    blas = {(r.id_a, r.id_b): r.sim for r in cosine_neardup_blas(emb, 0.4).collect()}
-    # Pair sets may differ only for sims within float noise of the
-    # threshold; none should exist at 1e-9 margin.
-    assert set(exact) == set(blas)
-    for k in exact:
-        assert abs(exact[k] - blas[k]) < 1e-5
-
-
-def test_blas_neardup_enforces_driver_ceiling(spark, sf_dir):
-    """The documented broadcast ceiling is enforced, not advisory: an
-    oversized corpus raises before any driver materialization, naming
-    the distributed alternatives."""
-    import pytest
-
-    from hadoop_map_reduce_spark.operators.similarity import cosine_neardup_blas
-    from hadoop_map_reduce_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="grid_blas|lsh_bucket"):
-        cosine_neardup_blas(emb, 0.4, max_rows=10)
-
-
 def test_simhash_duplicate_texts_collide(spark):
     from hadoop_map_reduce_spark.operators.dedup import simhash64
 

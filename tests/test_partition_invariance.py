@@ -42,7 +42,7 @@ QUERIES = [
     "merge_apply_cdc_deletes",
     "recursive_nation_chain",
     # session-6 additions: directional as-of carries, LOCF spine windows,
-    # k-means-blocked semantic dedup, profile-derived blocked cosine,
+    # k-means-blocked semantic dedup, profile-derived grid-BLAS cosine,
     # banded interval overlap, BPE merge learning (driver-loop + folds).
     "join_asof_nearest",
     "events_locf",

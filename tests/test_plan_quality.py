@@ -74,20 +74,6 @@ def test_embedding_neardup_no_nested_loop(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_blocked_neardup_matches_exact_pairwise(spark, sf_dir):
-    from hadoop_map_reduce_spark.operators.similarity import (
-        cosine_neardup_blocked,
-        cosine_neardup_pairs,
-    )
-    from hadoop_map_reduce_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    plain = sorted(map(tuple, cosine_neardup_pairs(emb, 0.4).collect()))
-    blocked = sorted(map(tuple, cosine_neardup_blocked(emb, 0.4).collect()))
-    assert plain == blocked  # bit-exact: same fold shapes, swapped operands
-    assert len(plain) > 0
-
-
 def test_asof_single_key_shuffle(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "join_asof")
     assert "Window" in plan
@@ -207,20 +193,59 @@ def test_sketch_hll_one_expand_no_join(spark, sf_dir):
 
 def test_grid_blas_matches_fold_blocked(spark, sf_dir):
     """The registered near-dup plan (grid cells + BLAS matmul) must stay
-    bit-identical to the Catalyst-fold grid twin: the round-6 margin on
-    this corpus (>=1e-12 from any boundary) absorbs summation-order
-    noise, so any mismatch means a real regression, not float drift."""
+    bit-identical to the fold reference ``cosine_neardup_pairs``: the
+    round-6 margin on this corpus (>=1e-12 from any boundary) absorbs
+    summation-order noise, so any mismatch means a real regression, not
+    float drift."""
     from hadoop_map_reduce_spark.operators.similarity import (
-        cosine_neardup_blocked,
         cosine_neardup_grid_blas,
+        cosine_neardup_pairs,
     )
     from hadoop_map_reduce_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fold = sorted(map(tuple, cosine_neardup_blocked(emb, 0.4).collect()))
+    fold = sorted(map(tuple, cosine_neardup_pairs(emb, 0.4).collect()))
     blas = sorted(map(tuple, cosine_neardup_grid_blas(emb, 0.4).collect()))
     assert fold == blas
     assert len(fold) > 0
+
+
+def test_grid_blas_matches_reference_on_crafted_vectors(spark):
+    """Grid BLAS equals the θ-join reference on the edge cases: a pair
+    whose cosine is exactly 0.96 (inclusive threshold), a duplicate and
+    a scaled copy (sim 1.0), a zero and a null vector (never pair), an
+    id past 32 bits, and fewer rows than the 8 grid blocks (empty
+    cells)."""
+    from hadoop_map_reduce_spark.operators.similarity import (
+        cosine_neardup_grid_blas,
+        cosine_neardup_pairs,
+    )
+
+    big = 10**12
+    df = spark.createDataFrame(
+        [
+            (1, [3.0, 4.0, 0.0]),
+            (2, [4.0, 3.0, 0.0]),
+            (5, [1.0, 2.0, 2.0]),
+            (6, [1.0, 2.0, 2.0]),
+            (big, [2.0, 4.0, 4.0]),
+            (7, [0.0, 0.0, 0.0]),
+            (8, None),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    eleven_15ths, two_thirds = 0.733333, 0.666667
+    sims = {
+        (1, 2): 0.96,
+        (1, 5): eleven_15ths, (1, 6): eleven_15ths, (1, big): eleven_15ths,
+        (2, 5): two_thirds, (2, 6): two_thirds, (2, big): two_thirds,
+        (5, 6): 1.0, (5, big): 1.0, (6, big): 1.0,
+    }
+    for t in (0.5, 0.96, 1.0):
+        ref = sorted(map(tuple, cosine_neardup_pairs(df, t).collect()))
+        grid = sorted(map(tuple, cosine_neardup_grid_blas(df, t).collect()))
+        assert grid == ref, t
+        assert ref == sorted((a, b, v) for (a, b), v in sims.items() if v >= t)
 
 
 def test_pagerank_no_cartesian_partial_agg(spark, sf_dir):

@@ -16,9 +16,6 @@ from tests.oracle_utils import compare_query
 @pytest.mark.parametrize(
     "name",
     [
-        "ann_lsh_recall_bound",
-        "ivf_recall_bound",
-        "pq_recall_bound",
         "curation_url_gate",
         "bpe_merge_table_census",
         "graph_triangles_approx",
@@ -26,7 +23,6 @@ from tests.oracle_utils import compare_query
         "sketch_cms_heavy_hitters",
         "events_attribution",
         "curation_url_normalize_dedup",
-        "embedding_hard_negatives",
     ],
 )
 def test_oracle_differential(spark, sf_dir, name):

@@ -289,3 +289,37 @@ def test_parser_fuzz_never_hangs_or_misframes():
 
     roundtrip()
     garbage()
+
+
+def test_stream_crawl_extract_outside_repo_root(sf_dir, tmp_path):
+    """The streaming WARC query matches its oracle when the driver runs
+    from another directory. The streaming-source runner unpickles the
+    source in a worker that cannot import the package by name, so the
+    source must travel by value. The repo goes on ``sys.path`` inside
+    the child, not on ``PYTHONPATH``: the JVM hands that variable on to
+    its Python workers, which would hide the failure."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from hadoop_map_reduce_spark import get_spark\n"
+        "from tests.oracle_utils import compare_query\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=4)\n"
+        f"compare_query(spark, {sf_dir!r}, 'stream_crawl_extract')\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]

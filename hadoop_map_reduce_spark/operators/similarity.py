@@ -687,24 +687,29 @@ def semantic_dedup_pairs(
     )
 
 
+#: Hash blocks per side of the ``cosine_neardup_grid_blas`` grid, and the
+#: row count of one matmul slab inside a cell.
+GRID_BLOCKS = 8
+GRID_ROW_CHUNK = 2048
+
+
 def cosine_neardup_grid_blas(
     df: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_blocks: int = 8,
-    row_chunk: int = 2048,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold on a block grid, with BLAS
     matmul inside each grid cell: the production path for what
     :func:`cosine_neardup_pairs` defines.
 
-    Each vector hashes to one of B blocks (``xxhash64`` of the id, so id
-    strides or parity cannot collapse the corpus into few blocks); both
-    sides replicate into the B·(B+1)/2 unordered block-pair cells and
-    meet in a cogroup on (block_a, block_b). That gives shuffle-partitioned
-    work units of ~(n/B)² pairs each and B-fold replication instead of
-    the reference θ-join's BroadcastNestedLoopJoin. Each cell computes its
+    Each vector hashes to one of B = ``GRID_BLOCKS`` blocks (``xxhash64``
+    of the id, so id strides or parity cannot collapse the corpus into
+    few blocks); both sides replicate into the B·(B+1)/2 unordered
+    block-pair cells and meet in a cogroup on (block_a, block_b). That
+    gives shuffle-partitioned work units of ~(n/B)² pairs each and
+    B-fold replication instead of the reference θ-join's
+    BroadcastNestedLoopJoin. Each cell computes its
     sims as one numpy matmul over Arrow-transferred batches instead of
     per-pair Catalyst expression folds (measured ~8× on the 2k-vector
     corpus; the gap widens with pair count). Null vectors are dropped,
@@ -718,14 +723,17 @@ def cosine_neardup_grid_blas(
     fold's. For float vectors the sims agree when no pair lies within
     summation-order noise (~1e-16) of a round-6 boundary: the margin is
     ≥1e-12 on the embeddings corpus, and parity with the reference is
-    test-pinned there and on crafted vectors. The round-6 step itself is
-    numpy's (half-to-even on ``sim * 1e6``), not SQL ROUND's half-up, so
-    a sim whose decimal form ends in a 5 at the 7th place would round
-    differently; no pair on the corpora here lands on such a tie.
+    test-pinned there and on crafted vectors. The round-6 step is the
+    DuckDB oracles' ROUND, not numpy's half-to-even: ``sim * 1e6``
+    rounds half away from zero, so an exact tie such as 109/128 =
+    0.8515625 gives 0.851563, as the reference's Spark ROUND does too.
+    (Spark rounds the shortest decimal form half-up; the two differ only
+    when that form ends in a 5 at the 7th place while ``sim * 1e6`` is
+    just below the half, e.g. 0.5000005, where this and DuckDB give 0.5.)
 
     At 100 TB: pick B so a block (~n/B vectors) fits an executor's Arrow
     batch; each cell is an independent work unit of bounded memory
-    (``row_chunk`` bounds the per-matmul slab), the shuffle moves each
+    (``GRID_ROW_CHUNK`` bounds the per-matmul slab), the shuffle moves each
     vector B times (vs a full-table broadcast), and AQE can split hot
     cells. Exact all-pairs at a low threshold is Θ(n²) compute — the
     similarity distribution is a continuum through any threshold, so no
@@ -736,7 +744,7 @@ def cosine_neardup_grid_blas(
     import pandas as pd
 
     spark = df.sparkSession
-    grid = [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)]
+    grid = [(i, j) for i in range(GRID_BLOCKS) for j in range(i, GRID_BLOCKS)]
 
     def side(id_alias: str, vec_alias: str, key_a: str, key_b: str, member):
         # Every name is per-side (including the task-list columns): both
@@ -749,7 +757,7 @@ def cosine_neardup_grid_blas(
             F.col(id_col).alias(id_alias),
             F.col(vec_col).cast("array<double>").alias(vec_alias),
         )
-        blk = F.pmod(F.xxhash64(F.col(id_alias)), F.lit(num_blocks)).cast(
+        blk = F.pmod(F.xxhash64(F.col(id_alias)), F.lit(GRID_BLOCKS)).cast(
             "int"
         )
         return s.join(F.broadcast(tasks), blk == F.col(member))
@@ -778,11 +786,11 @@ def cosine_neardup_grid_blas(
         na[na == 0] = np.inf
         same_block = key[0] == key[1]
         outs = []
-        for lo in range(0, len(ids_a), row_chunk):
-            hi = lo + row_chunk
-            S = np.round(
-                (A[lo:hi] @ B.T) / np.outer(na[lo:hi], nb), 6
-            )
+        for lo in range(0, len(ids_a), GRID_ROW_CHUNK):
+            hi = lo + GRID_ROW_CHUNK
+            Y = (A[lo:hi] @ B.T) / np.outer(na[lo:hi], nb) * 1e6
+            T = np.trunc(Y)  # SQL ROUND: ties go away from zero
+            S = (T + np.sign(Y) * (np.abs(Y - T) >= 0.5)) / 1e6
             mask = S >= thr
             if same_block:
                 mask &= ids_a[lo:hi, None] < ids_b[None, :]

@@ -732,8 +732,7 @@ def similarity_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot partitions at scale. Counts are integers, so every dot product
     and squared norm is an exact double in any summation order: the
     oracle's sparse integer formulation meets the engine's dense matmul
-    bit-for-bit (up to the round-6 tie cosine_neardup_grid_blas
-    documents)."""
+    bit-for-bit, and both round-6 steps round ties half away from zero."""
     from hadoop_map_reduce_spark.operators.similarity import (
         cosine_neardup_grid_blas,
     )

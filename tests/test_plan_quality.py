@@ -214,8 +214,8 @@ def test_grid_blas_matches_reference_on_crafted_vectors(spark):
     """Grid BLAS equals the θ-join reference on the edge cases: a pair
     whose cosine is exactly 0.96 (inclusive threshold), a duplicate and
     a scaled copy (sim 1.0), a zero and a null vector (never pair), an
-    id past 32 bits, and fewer rows than the 8 grid blocks (empty
-    cells)."""
+    id past 32 bits, fewer rows than the 8 grid blocks (empty cells),
+    and an exact round-6 tie (half away from zero, as SQL ROUND)."""
     from hadoop_map_reduce_spark.operators.similarity import (
         cosine_neardup_grid_blas,
         cosine_neardup_pairs,
@@ -246,6 +246,19 @@ def test_grid_blas_matches_reference_on_crafted_vectors(spark):
         grid = sorted(map(tuple, cosine_neardup_grid_blas(df, t).collect()))
         assert grid == ref, t
         assert ref == sorted((a, b, v) for (a, b), v in sims.items() if v >= t)
+
+    # Integer counts whose sim is the exact tie 109/128 = 0.8515625:
+    # SQL ROUND gives 0.851563, half-to-even would give 0.851562.
+    tie = spark.createDataFrame(
+        [
+            (1, [15.0, 5.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 0.0, 0.0, 0.0, 0.0]),
+            (2, [6.0, 3.0, 1.0, 1.0, 1.0, 1.0, 0.0, 0.0, 3.0, 2.0, 1.0, 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    ref = cosine_neardup_pairs(tie, 0.85).collect()
+    grid = cosine_neardup_grid_blas(tie, 0.85).collect()
+    assert list(map(tuple, grid)) == list(map(tuple, ref)) == [(1, 2, 0.851563)]
 
 
 def test_pagerank_no_cartesian_partial_agg(spark, sf_dir):
